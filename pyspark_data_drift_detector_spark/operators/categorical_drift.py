@@ -204,20 +204,22 @@ def categorical_drift_from_cells(
     (nullable = the null-count row), ref_cnt, curr_cnt`` — as produced by
     ``pair_frequency_cells``, or re-derived from any additive category
     state (``mergeable.merged_category_cells``: the incremental path whose
-    windows merge WITHOUT re-scanning data). Callers that reference the
-    cells more than once should persist before calling.
+    windows merge WITHOUT re-scanning data). Small cells frames are read
+    once (totals and top-k ranks share one window); above the salt gate
+    totals, cutoffs and probe each read them, so callers should persist.
     """
     th = dict(DEFAULT_CAT_THRESHOLDS)
     th.update(thresholds or {})
     is_null_val = F.col("value").isNull()
     from pyspark_data_drift_detector_spark.operators.frequency import (
+        _should_salt,
         pair_top_k_cutoffs,
         with_key_totals,
     )
 
-    # totals via groupBy + broadcast join (see with_key_totals); derived
-    # expressions assembled as SQL strings — see profile._quantile_agg_sql
-    # for why (py4j round-trips dominated driver-side plan construction)
+    # totals via with_key_totals; derived expressions assembled as SQL
+    # strings — see profile._quantile_agg_sql for why (py4j round-trips
+    # dominated driver-side plan construction)
     nn = with_key_totals(
         cells,
         {
@@ -226,44 +228,45 @@ def categorical_drift_from_cells(
             "ref_total": F.sum(F.when(~is_null_val, F.col("ref_cnt")).otherwise(F.lit(0))),
             "curr_total": F.sum(F.when(~is_null_val, F.col("curr_cnt")).otherwise(F.lit(0))),
         },
-    ).selectExpr(
-        "*",
-        "CASE WHEN value IS NOT NULL AND ref_total > 0"
-        " THEN ref_cnt / ref_total ELSE 0.0D END AS ref_freq",
-        "CASE WHEN value IS NOT NULL AND curr_total > 0"
-        " THEN curr_cnt / curr_total ELSE 0.0D END AS curr_freq",
     )
-    # top-k membership via per-column cutoffs (top_k_cutoffs) instead of a
-    # row_number window over whole-column partitions: the cutoff replays
-    # `rank <= k` exactly (the (cnt DESC, value ASC) order is total because
-    # values are unique per column, and null rows — which the old window
-    # sorted last — never reach a top-k membership anyway), while no task
-    # sorts more than ~1/salt of one column's category set.
     if top_k is None:
-        nn = nn.selectExpr(
-            "*",
-            "value IS NOT NULL AND ref_cnt > 0 AS member_ref",
-            "value IS NOT NULL AND curr_cnt > 0 AS member_curr",
+        rank_ok = "true"
+    elif not _should_salt(cells):
+        # small frames: top-k membership is row_number() in the SAME
+        # column_name window as the totals — one exchange, no cutoff
+        # aggregate or broadcast join (groups.group_categorical_stats'
+        # shape). Null rows sort last, so non-null ranks are the ranks
+        # among the non-null cells, exactly as the cutoff path computes.
+        rank_ok = (
+            "row_number() OVER (PARTITION BY column_name ORDER BY value IS NULL,"
+            f" {{pre}}_cnt DESC, value ASC) <= {int(top_k)}"
         )
     else:
         # top-k membership via ONE pair-cutoff pass (both sides share the
-        # salted/global shuffles) broadcast back — replaces the row_number
-        # windows that sorted a whole column's category set in one task.
-        # Ranks run over the NON-null cells (the old windows sorted nulls
-        # last, so non-null ranks are identical); the null guard preserves
-        # the rest of the semantics.
+        # salted/global shuffles) broadcast back, so no task sorts more
+        # than ~1/salt of one column's category set. The cutoff replays
+        # `rank <= k` exactly: the (cnt DESC, value ASC) order is total
+        # because values are unique per column, and ranks run over the
+        # NON-null cells; the null guard preserves the rest.
         cuts = pair_top_k_cutoffs(cells.filter(~is_null_val), top_k)
-        nn = nn.join(F.broadcast(cuts), "column_name", "left").selectExpr(
-            "* EXCEPT (ref_cnt_cut_cnt, ref_cnt_cut_value,"
-            " curr_cnt_cut_cnt, curr_cnt_cut_value)",
-            *[
-                f"value IS NOT NULL AND {pre}_cnt > 0 AND coalesce("
-                f"({pre}_cnt > {pre}_cnt_cut_cnt) OR"
-                f" ({pre}_cnt = {pre}_cnt_cut_cnt AND value <= {pre}_cnt_cut_value),"
-                f" false) AS member_{pre}"
-                for pre in ("ref", "curr")
-            ],
+        nn = nn.join(F.broadcast(cuts), "column_name", "left")
+        rank_ok = (
+            "coalesce(({pre}_cnt > {pre}_cnt_cut_cnt) OR ({pre}_cnt = {pre}_cnt_cut_cnt"
+            " AND value <= {pre}_cnt_cut_value), false)"
         )
+    nn = nn.selectExpr(
+        "*",
+        *[
+            e
+            for pre in ("ref", "curr")
+            for e in (
+                f"CASE WHEN value IS NOT NULL AND {pre}_total > 0"
+                f" THEN {pre}_cnt / {pre}_total ELSE 0.0D END AS {pre}_freq",
+                f"value IS NOT NULL AND {pre}_cnt > 0 AND {rank_ok.format(pre=pre)}"
+                f" AS member_{pre}",
+            )
+        ],
+    )
 
     # JS over the union of the two per-side top-k supports: a category keeps
     # probability 0 on a side whose top-k it didn't make (dict-union

@@ -68,10 +68,7 @@ def with_key_totals(
     key_list = list(keys)
     if not _should_salt(cells):
         w = Window.partitionBy(*key_list)
-        out = cells
-        for name, expr in sums.items():
-            out = out.withColumn(name, expr.over(w))
-        return out
+        return cells.select("*", *[expr.over(w).alias(name) for name, expr in sums.items()])
     totals = cells.groupBy(*key_list).agg(
         *[expr.alias(name) for name, expr in sums.items()]
     )

@@ -23,8 +23,16 @@ quantiles are required.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from pyspark_data_drift_detector_spark.functions.quoting import ensure_safe_columns, qs
+from pyspark_data_drift_detector_spark.operators.categorical_drift import (
+    categorical_drift_from_cells,
+)
+from pyspark_data_drift_detector_spark.operators.frequency import _should_salt, with_key_totals
+from pyspark_data_drift_detector_spark.operators.numeric_drift import numeric_drift_from_joined
 
 
 def partitioned_profile(
@@ -67,6 +75,34 @@ def partitioned_profile(
     )
 
 
+#: the additive merge: ``(merged name, aggregate, state column)``
+_MERGE_AGGS = (
+    ("n_rows", "sum", "n_rows"), ("n", "sum", "n"), ("null_count", "sum", "null_count"),
+    ("s", "sum", "sum"), ("ss", "sum", "sumsq"), ("min", "min", "min"), ("max", "max", "max"),
+)
+
+
+def _merge_aggs(pre: str = "", when: str = "true") -> list[Column]:
+    """The additive merge over the state rows matching ``when``."""
+    return [
+        F.expr(f"{fn}(CASE WHEN {when} THEN `{c}` END) AS `{pre}{name}`")
+        for name, fn, c in _MERGE_AGGS
+    ]
+
+
+def _merged_stats(pre: str = "") -> list[str]:
+    """The profile derived from ``_merge_aggs(pre)``."""
+    n, s, ss = f"`{pre}n`", f"`{pre}s`", f"`{pre}ss`"
+    return [
+        f"`{pre}n_rows`", n, f"`{pre}null_count`",
+        f"`{pre}null_count` / `{pre}n_rows` AS `{pre}null_ratio`",
+        f"`{pre}min`", f"`{pre}max`",
+        f"CASE WHEN {n} > 0 THEN {s} / {n} END AS `{pre}mean`",
+        f"CASE WHEN {n} > 1 THEN sqrt(greatest(0.0D, ({ss} - {s} * {s} / {n}) / ({n} - 1)))"
+        f" END AS `{pre}stddev`",
+    ]
+
+
 def merge_profiles(
     parts: DataFrame, keys: tuple[str, ...] = ("column_name",)
 ) -> DataFrame:
@@ -80,31 +116,65 @@ def merge_profiles(
     stddev`` (sample stddev, guarded to NULL for n < 2 and clamped at 0
     against float cancellation).
     """
-    merged = parts.groupBy(*keys).agg(
-        *[
-            F.expr(e)
-            for e in (
-                "sum(n_rows) AS n_rows",
-                "sum(n) AS n",
-                "sum(null_count) AS null_count",
-                "sum(sum) AS s",
-                "sum(sumsq) AS ss",
-                "min(min) AS min",
-                "max(max) AS max",
-            )
-        ]
+    merged = parts.groupBy(*keys).agg(*_merge_aggs())
+    return merged.selectExpr(*[f"`{k}`" for k in keys], *_merged_stats())
+
+
+def _window_pred(partitions: list[str]) -> str:
+    """SQL predicate: ``partition_id`` is in the window (none for an empty
+    one). qs() quotes each caller-supplied id — a quote/backslash in a
+    partition id must not be able to misparse the plan."""
+    ids = ", ".join(qs(str(p)) for p in partitions)
+    return f"partition_id IN ({ids})" if ids else "false"
+
+
+def windowed_profiles(
+    parts: DataFrame,
+    ref_partitions: list[str],
+    curr_partitions: list[str],
+    keys: tuple[str, ...] = ("column_name",),
+    quantile_parts: DataFrame | None = None,
+) -> DataFrame:
+    """``ref_*``/``curr_*`` merged profiles of two windows — the input of
+    ``numeric_drift_from_joined`` — from ONE ``groupBy(keys)`` over both
+    windows' state rows, each side a conditional aggregate: no per-side
+    sub-plan, no join. Each side equals ``merge_profiles`` over its window
+    plus ``p25, p50, p75``; a side with no rows for a key is all NULL
+    (full-outer-join semantics). ``quantile_parts``' KLL rows join the
+    same aggregate; without them, or for a side with no sketch rows, the
+    quartiles are NULL."""
+    sides = {"ref_": _window_pred(ref_partitions), "curr_": _window_pred(curr_partitions)}
+    rows = parts.select("partition_id", *keys, *[c for _, _, c in _MERGE_AGGS])
+    quartiles = "CAST(NULL AS ARRAY<DOUBLE>)"
+    if quantile_parts is not None:
+        rows = rows.unionByName(
+            quantile_parts.select("partition_id", *keys, "kll"), allowMissingColumns=True
+        )
+        # an empty KLL merge is not a readable sketch: guard it to NULL
+        quartiles = (
+            "CASE WHEN count(CASE WHEN {w} THEN kll END) > 0"
+            " AND count(CASE WHEN {w} THEN n_rows END) > 0 THEN kll_sketch_get_quantile_double("
+            "kll_merge_agg_double(CASE WHEN {w} THEN kll END), array(0.25D, 0.5D, 0.75D)) END"
+        )
+    aggs = [
+        a
+        for pre, w in sides.items()
+        for a in (*_merge_aggs(pre, w), F.expr(quartiles.format(w=w)).alias(f"{pre}q"))
+    ]
+    merged = (
+        rows.where(" OR ".join(sides.values()))
+        .groupBy(*keys)
+        .agg(*aggs)
+        .where("ref_n_rows IS NOT NULL OR curr_n_rows IS NOT NULL")
     )
     return merged.selectExpr(
         *[f"`{k}`" for k in keys],
-        "n_rows",
-        "n",
-        "null_count",
-        "null_count / n_rows AS null_ratio",
-        "min",
-        "max",
-        "CASE WHEN n > 0 THEN s / n END AS mean",
-        "CASE WHEN n > 1 THEN sqrt(greatest(0.0D, (ss - s * s / n) / (n - 1))) END"
-        " AS stddev",
+        *[
+            e
+            for pre in sides
+            for e in _merged_stats(pre)
+            + [f"`{pre}q`[{i}] AS `{pre}p{p}`" for i, p in enumerate((25, 50, 75))]
+        ],
     )
 
 
@@ -116,60 +186,24 @@ def merged_drift(
     quantile_parts: DataFrame | None = None,
 ) -> DataFrame:
     """Numeric drift between two PARTITION WINDOWS of one summary table —
-    no data re-scan at all: both sides' profiles come from
-    ``merge_profiles`` over the persisted additive states, then the
-    standard M16 expression scoring runs on the O(columns) join.
+    no data re-scan at all: both sides' profiles come from ONE
+    ``windowed_profiles`` aggregate over the persisted additive states
+    (one hash exchange, no join), then the standard M16 expression
+    scoring runs on its O(columns) rows.
 
     ``quantile_parts``: the matching ``partitioned_quantiles`` KLL state
     table, if the pipeline persists one. When given, each side's
-    p25/p50/p75 come from a ``merged_quantiles`` sketch-merge over the
-    same window (still no data re-scan — the sketches are O(partitions ×
-    columns) fixed-size blobs), so the drift score carries the full M16
-    metric set (median/IQR) the scan-time path reports. Without it the
-    quantile metrics are NULL and the weighted score renormalizes over
-    the metrics that ARE present (the same weight-mass rule the
-    reference applies to missing metrics). This is the "did yesterday
-    drift from last week" check a daily pipeline runs for the cost of a
-    metadata query.
+    p25/p50/p75 come from a sketch merge over the same window in that
+    aggregate, so the drift score carries the full M16 metric set
+    (median/IQR) the scan-time path reports. KLL merges are randomized:
+    the quantile metrics, and so ``drift_score``, are then not
+    bit-reproducible across calls (they stay within the sketch's rank
+    error). Without it the quantile metrics are NULL and the weighted
+    score renormalizes over the metrics that ARE present (the same
+    weight-mass rule the reference applies to missing metrics).
     """
-    from pyspark_data_drift_detector_spark.operators.numeric_drift import (
-        numeric_drift_from_joined,
-    )
-
-    windows = {"ref_": list(ref_partitions), "curr_": list(curr_partitions)}
-    prefixed = []
-    for pre, pids in windows.items():
-        prof = merge_profiles(parts.where(F.col("partition_id").isin(pids)))
-        if quantile_parts is None:
-            # additive state carries no quantiles: NULL placeholders let
-            # the scorer's weight-mass normalization drop those metrics
-            prof = prof.selectExpr(
-                "*",
-                *[f"CAST(NULL AS DOUBLE) AS `{q}`" for q in ("p25", "p50", "p75")],
-            )
-        else:
-            est = merged_quantiles(
-                quantile_parts.where(F.col("partition_id").isin(pids)),
-                probs=(0.25, 0.5, 0.75),
-            )
-            # pivot the (column_name, p, value) rows into one row per column
-            qwide = est.groupBy("column_name").agg(
-                *[
-                    F.expr(
-                        f"max(CASE WHEN p = {p}D THEN value END) AS p{int(p * 100)}"
-                    )
-                    for p in (0.25, 0.5, 0.75)
-                ]
-            )
-            prof = prof.join(F.broadcast(qwide), "column_name", "left")
-        prefixed.append(
-            prof.selectExpr(
-                "column_name",
-                *[f"`{c}` AS `{pre}{c}`" for c in prof.columns if c != "column_name"],
-            )
-        )
-    joined = prefixed[0].join(F.broadcast(prefixed[1]), "column_name", "full_outer")
-    return numeric_drift_from_joined(joined, thresholds)
+    sides = windowed_profiles(parts, ref_partitions, curr_partitions, quantile_parts=quantile_parts)
+    return numeric_drift_from_joined(sides, thresholds)
 
 
 def incremental_profile(
@@ -211,8 +245,6 @@ def partitioned_categories(
     """
     if not columns:
         raise ValueError("no columns")
-    from pyspark_data_drift_detector_spark.functions.quoting import ensure_safe_columns
-
     ensure_safe_columns(columns)
     part = F.expr(partition_by) if isinstance(partition_by, str) else partition_by
     tagged = df.withColumn("__pid", part.cast("string"))
@@ -241,8 +273,6 @@ def merge_categories(parts: DataFrame) -> DataFrame:
     freq`` (null-value rows carry freq NULL). A tiny aggregate over the
     summary table — no data re-scan.
     """
-    from pyspark_data_drift_detector_spark.operators.frequency import with_key_totals
-
     merged = parts.groupBy("column_name", "value").agg(F.sum("cnt").alias("cnt"))
     merged = with_key_totals(
         merged,
@@ -274,20 +304,13 @@ def merged_category_cells(
     the state rows of both windows (the groupBy aligns the sides for
     free, exactly like the scan-time path).
     """
-    from pyspark_data_drift_detector_spark.functions.quoting import qs
-
-    # qs() quotes each caller-supplied id — a quote/backslash in a
-    # partition id must not be able to misparse the plan
-    ref_set = ", ".join(qs(str(p)) for p in ref_partitions) or "''"
-    curr_set = ", ".join(qs(str(p)) for p in curr_partitions) or "''"
+    ref, curr = _window_pred(ref_partitions), _window_pred(curr_partitions)
     return (
-        parts.where(
-            F.col("partition_id").isin(list(ref_partitions) + list(curr_partitions))
-        )
+        parts.where(f"{ref} OR {curr}")
         .groupBy("column_name", "value")
         .agg(
-            F.expr(f"sum(CASE WHEN partition_id IN ({ref_set}) THEN cnt ELSE 0 END)").alias("ref_cnt"),
-            F.expr(f"sum(CASE WHEN partition_id IN ({curr_set}) THEN cnt ELSE 0 END)").alias("curr_cnt"),
+            F.expr(f"sum(CASE WHEN {ref} THEN cnt ELSE 0 END)").alias("ref_cnt"),
+            F.expr(f"sum(CASE WHEN {curr} THEN cnt ELSE 0 END)").alias("curr_cnt"),
         )
     )
 
@@ -304,18 +327,20 @@ def merged_categorical_drift(
     sides' aligned cells come from ``merged_category_cells`` (a tiny
     aggregate over the persisted additive state, no data re-scan), then
     the standard scoring (``categorical_drift_from_cells``) runs on the
-    O(categories) table.
+    O(categories) table. Below the salt gate (``frequency._should_salt``)
+    that is one lazy plan — the cells exchange plus one window exchange for
+    totals and top-k ranks — whose single read of the cells needs no cache.
+    Above it totals, cutoffs and probe each read the cells: they are
+    persisted, the O(columns) result is eagerly local-checkpointed and the
+    cells cache released before returning.
     """
-    from pyspark import StorageLevel
-
-    from pyspark_data_drift_detector_spark.operators.categorical_drift import (
-        categorical_drift_from_cells,
-    )
-
-    cells = merged_category_cells(parts, ref_partitions, curr_partitions).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    return categorical_drift_from_cells(cells, thresholds, top_k)
+    cells = merged_category_cells(parts, ref_partitions, curr_partitions)
+    if not _should_salt(cells):
+        return categorical_drift_from_cells(cells, thresholds, top_k)
+    cells = cells.persist(StorageLevel.MEMORY_AND_DISK)
+    out = categorical_drift_from_cells(cells, thresholds, top_k).localCheckpoint(eager=True)
+    cells.unpersist(blocking=False)
+    return out
 
 
 def partitioned_distinct(
@@ -341,8 +366,6 @@ def partitioned_distinct(
     """
     if not columns:
         raise ValueError("no columns")
-    from pyspark_data_drift_detector_spark.functions.quoting import ensure_safe_columns
-
     ensure_safe_columns(columns)
     part = F.expr(partition_by) if isinstance(partition_by, str) else partition_by
     melted = df.withColumn("__pid", part.cast("string")).selectExpr(
@@ -395,8 +418,6 @@ def partitioned_quantiles(
     """
     if not columns:
         raise ValueError("no columns")
-    from pyspark_data_drift_detector_spark.functions.quoting import ensure_safe_columns
-
     ensure_safe_columns(columns)
     part = F.expr(partition_by) if isinstance(partition_by, str) else partition_by
     melted = df.withColumn("__pid", part.cast("string")).selectExpr(
@@ -460,8 +481,6 @@ def partitioned_heavy_hitters(
     """
     if not columns:
         raise ValueError("no columns")
-    from pyspark_data_drift_detector_spark.functions.quoting import ensure_safe_columns
-
     ensure_safe_columns(columns)
     part = F.expr(partition_by) if isinstance(partition_by, str) else partition_by
     melted = df.withColumn("__pid", part.cast("string")).selectExpr(
@@ -527,8 +546,6 @@ def partitioned_group_profile(
     """
     if not columns:
         raise ValueError("no columns to profile")
-    from pyspark_data_drift_detector_spark.functions.quoting import ensure_safe_columns
-
     ensure_safe_columns([*columns, group_col])
     part = F.expr(partition_by) if isinstance(partition_by, str) else partition_by
     melted = df.withColumn("__pid", part.cast("string")).selectExpr(
@@ -571,25 +588,6 @@ def merged_group_drift(
     Quantile metrics are NULL (additive state) and the score
     renormalizes, exactly like ``merged_drift`` without KLL state.
     """
-    from pyspark_data_drift_detector_spark.operators.numeric_drift import (
-        numeric_drift_from_joined,
-    )
-
     keys = ("group_value", "column_name")
-    windows = {"ref_": list(ref_partitions), "curr_": list(curr_partitions)}
-    prefixed = []
-    for pre, pids in windows.items():
-        prof = merge_profiles(
-            parts.where(F.col("partition_id").isin(pids)), keys=keys
-        ).selectExpr(
-            "*",
-            *[f"CAST(NULL AS DOUBLE) AS `{q}`" for q in ("p25", "p50", "p75")],
-        )
-        prefixed.append(
-            prof.selectExpr(
-                *[f"`{k}`" for k in keys],
-                *[f"`{c}` AS `{pre}{c}`" for c in prof.columns if c not in keys],
-            )
-        )
-    joined = prefixed[0].join(prefixed[1], list(keys), "full_outer")
-    return numeric_drift_from_joined(joined, thresholds)
+    sides = windowed_profiles(parts, ref_partitions, curr_partitions, keys=keys)
+    return numeric_drift_from_joined(sides, thresholds)

@@ -692,13 +692,22 @@ def detect_drift_incremental(
     additive summaries once (``mergeable.partitioned_profile`` +
     ``mergeable.partitioned_categories``, optionally
     ``mergeable.partitioned_quantiles``), and any two partition windows
-    compare for the cost of two metadata-table aggregates — the
+    compare for the cost of a metadata query — the
     re-profile-both-full-snapshots cost the reference pays on every run
-    (SURVEY §3) drops out entirely. Numeric columns get the M16 weighted
-    score; with ``quantile_state`` (a KLL sketch table) the score carries
-    median/IQR like the scan-time path, otherwise those metrics are
-    absent and the weight mass renormalizes. Categorical columns get the
-    full M18/M20 score.
+    (SURVEY §3) drops out entirely. Each half is one small plan over the
+    state tables, with no per-side sub-plans and no joins:
+
+    - numeric: one ``groupBy(column_name)`` over both windows' profile
+      (and KLL) rows, each side a conditional aggregate
+      (``mergeable.windowed_profiles``), scored with the M16 weighted
+      score. With ``quantile_state`` the score carries median/IQR like the
+      scan-time path; KLL merges are randomized, so that ``drift_score``
+      is not bit-reproducible across calls (it stays within the sketch's
+      rank error). Without it those metrics are absent and the weight
+      mass renormalizes.
+    - categorical: the cells ``groupBy`` plus one ``column_name`` window
+      carrying totals and top-k ranks, scored with the full M18/M20 score.
+      Nothing is left cached.
 
     Output: one slim row per column — ``column_name, column_type,
     drift_score, drift_severity, drift_detected`` — the summary

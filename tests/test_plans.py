@@ -446,6 +446,44 @@ def test_mergeable_state_plan_shapes(li, docs):
     assert count_shuffles(merge_categories(cat_state)) <= 3
 
 
+def test_incremental_window_query_plan(spark, sf_dir, tmp_path):
+    """A window query over state tables is one small plan per half, with
+    no per-side sub-plans and no joins: the numeric half is ONE hash
+    exchange (the conditional aggregate over profile + KLL rows), the
+    categorical half the cells groupBy exchange plus one column_name
+    window exchange (totals and top-k ranks share it)."""
+    from pyspark_data_drift_detector_spark.operators.mergeable import (
+        merged_categorical_drift,
+        merged_drift,
+        partitioned_categories,
+        partitioned_profile,
+        partitioned_quantiles,
+    )
+    from pyspark_data_drift_detector_spark.pipeline import detect_drift_incremental
+    from pyspark_data_drift_detector_spark.plans.inspect import simple_plan
+
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    num, pid = ["l_quantity", "l_discount"], "pmod(l_orderkey, 4)"
+    states = {
+        "prof": partitioned_profile(li, num, pid),
+        "kll": partitioned_quantiles(li, num, pid),
+        "cats": partitioned_categories(li, ["l_returnflag", "l_linestatus"], pid),
+    }
+    for name, df in states.items():
+        df.write.parquet(str(tmp_path / name))
+    prof, kll, cats = (spark.read.parquet(str(tmp_path / n)) for n in states)
+    ref, curr = ["0", "1"], ["2", "3"]
+
+    numeric = merged_drift(prof, ref, curr, quantile_parts=kll)
+    categorical = merged_categorical_drift(cats, ref, curr)
+    both = detect_drift_incremental(prof, cats, ref, curr, quantile_state=kll)
+    for df, shuffles in ((numeric, 1), (categorical, 2), (both, 3)):
+        assert count_shuffles(df) == shuffles
+        assert "BroadcastExchange" not in simple_plan(df)
+        assert "Join" not in simple_plan(df)
+    assert "Window" in simple_plan(categorical)
+
+
 def test_mmd_drift_plan(spark, sf_dir):
     """MMD: narrow feature map over the scans, one O(D)-row groupBy, one
     final aggregate — no join, no window, no per-row Python."""
