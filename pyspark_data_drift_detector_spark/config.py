@@ -144,7 +144,6 @@ _DEFAULTS: dict[str, Any] = {
     "churn_threshold": 0.5,
     "exact_group_median": False,
     "custom_analyzers": [],
-    "materialize_families": True,
     "json_fields": {},
     "output_table": None,
     "output_path": None,

@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.column import Column
 
+from pyspark_data_drift_detector_spark.functions.lifetime import keep
+
 DEFAULT_CAT_THRESHOLDS: dict[str, float] = {
     "category_threshold": 0.03,
     "chi_square_pvalue": 0.05,
@@ -178,17 +180,13 @@ def categorical_drift(
     """
     from pyspark_data_drift_detector_spark.operators.frequency import pair_frequency_cells
 
-    from pyspark import StorageLevel
-
-    # Everything derives from this ONE cells aggregation, which is PERSISTED
+    # Everything derives from this ONE cells aggregation, which is KEPT
     # (O(distinct categories)) because totals, both top-k cutoffs, and the
     # probe side all reference it — unpersisted, each reference re-runs the
     # melt+groupBy over both snapshots. Null-category rows are NOT filtered
     # out of the probe (null counts derive from the same pass); every
     # null-sensitive expression guards on value IS NOT NULL.
-    cells = pair_frequency_cells(df_ref, df_curr, columns).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    cells = keep(pair_frequency_cells(df_ref, df_curr, columns))
     return categorical_drift_from_cells(cells, thresholds, top_k, p_value_mode)
 
 
@@ -354,9 +352,11 @@ def categorical_drift_from_cells(
 
     out = stats.selectExpr(
         "* EXCEPT (__ref_nulls, __curr_nulls)",
-        "__ref_nulls / ref_n_rows AS ref_null_ratio",
-        "__curr_nulls / curr_n_rows AS curr_null_ratio",
-        "__curr_nulls / curr_n_rows - __ref_nulls / ref_n_rows AS null_diff",
+        # an empty side has NULL ratios, which score as no null drift
+        "try_divide(__ref_nulls, ref_n_rows) AS ref_null_ratio",
+        "try_divide(__curr_nulls, curr_n_rows) AS curr_null_ratio",
+        "try_divide(__curr_nulls, curr_n_rows) - try_divide(__ref_nulls, ref_n_rows)"
+        " AS null_diff",
     )
 
     js_c = "coalesce(js_distance, 0.0D)"

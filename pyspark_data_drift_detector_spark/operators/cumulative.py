@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pyspark_data_drift_detector_spark.functions.lifetime import keep
+
 #: Cell-count gate for the single-task prefix-sum fast path: below this,
 #: the whole (key, order, counts) histogram (≤ ~2M rows × a few numeric
 #: cols ≈ tens of MB packed) is sorted and prefix-summed in ONE vectorized
@@ -141,7 +143,6 @@ def bucketed_cumsum(
     # quantiles_by_counts at 1000 vs 100)
     edge_accuracy: int = 100,
     lead_col: str | None = None,
-    _persisted: list | None = None,
     _n_cells: int | None = None,
 ) -> DataFrame:
     """Add ``cum_<c>`` (inclusive running sum in ``order`` within ``key``)
@@ -151,21 +152,12 @@ def bucketed_cumsum(
 
     ``cells`` must have one row per (key, order) — i.e. already grouped —
     with non-null ``order``.
-
-    ``_persisted``: optional list the internally persisted cells frame is
-    appended to, so materializing callers can ``unpersist()`` it once the
-    result is checkpointed instead of leaking the cache until driver GC.
     """
-    from pyspark import StorageLevel
-
     # cells is referenced three times (edge fit, bucket totals, final
     # windows); without persistence the upstream melt+groupBy runs once per
-    # reference (measured ~4x on the EDF suite queries). MEMORY_AND_DISK so
-    # a 100 TB histogram spills instead of OOMing; the ContextCleaner drops
-    # the entry when the plan is collected.
-    cells = cells.persist(StorageLevel.MEMORY_AND_DISK)
-    if _persisted is not None:
-        _persisted.append(cells)
+    # reference (measured ~4x on the EDF suite queries). Kept (spilling to
+    # disk), so an enclosing owned run releases it.
+    cells = keep(cells)
     # Single-task fast path for small histograms: the count rides the
     # persist every downstream reference needs materialized anyway (the
     # neardup_clusters gate convention); ``_n_cells`` lets a caller that

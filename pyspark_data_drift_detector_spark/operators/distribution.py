@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pyspark_data_drift_detector_spark.functions.lifetime import collect_local, keep, owned_run
 from pyspark_data_drift_detector_spark.operators.frequency import pair_frequency_cells
 from pyspark_data_drift_detector_spark.operators.profile import numeric_profile_pair
 
@@ -558,13 +559,18 @@ def equidepth_histogram(
     accuracy/state tradeoff, default 800). The binning pass is identical
     in every mode.
 
-    In counts mode the value-histogram cells are persisted (reused for
-    edges AND bin counts); ``materialize=True`` (default) eagerly
-    localCheckpoints the O(columns × bins)-row result and unpersists the
-    cells so nothing leaks into long-lived sessions; ``materialize=False``
-    returns the plan lazily and leaves cache lifetime to the caller (the
-    plan-inspection knob, matching ``key_skew_profile``/``zipf_fit``).
+    In counts mode the value-histogram cells are kept (reused for edges
+    AND bin counts); ``materialize=True`` (default) returns the
+    O(columns × bins)-row result as a local relation from one owned run
+    that releases the caches; ``materialize=False`` returns the plan
+    lazily and leaves cache lifetime to the caller (the plan-inspection
+    knob, matching ``key_skew_profile``/``zipf_fit``).
     """
+    if quantile_mode == "counts" and materialize:
+        with owned_run():
+            return collect_local(
+                [equidepth_histogram(df, columns, bins, quantile_mode, kll_k, materialize=False)]
+            )[0]
     from pyspark_data_drift_detector_spark.functions.quoting import (
         ensure_safe_columns,
     )
@@ -582,21 +588,13 @@ def equidepth_histogram(
         # ONE raw scan total: the value histogram yields the edges AND
         # the bin counts (a bin's count is the sum of cell counts in its
         # edge range) — the raw table is never re-scanned for binning
-        from pyspark import StorageLevel
-
         from pyspark_data_drift_detector_spark.operators.profile import (
             _quantile_cells,
             _quantiles_from_cells,
         )
 
-        caches: list = []
-        cells = _quantile_cells(df, columns).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        caches.append(cells)
-        per_col = _quantiles_from_cells(
-            cells, probs, _persisted=caches
-        ).selectExpr("column_name", "q AS edges")
+        cells = keep(_quantile_cells(df, columns))
+        per_col = _quantiles_from_cells(cells, probs).selectExpr("column_name", "q AS edges")
         binned = (
             cells.join(F.broadcast(per_col), "column_name")
             .selectExpr(
@@ -607,7 +605,7 @@ def equidepth_histogram(
                 " b -> value > b)) AS INT) AS bin",
             )
         )
-        out = (
+        return (
             binned.groupBy("column_name", "bin")
             .agg(
                 F.expr("CAST(sum(__cnt) AS BIGINT) AS cnt"),
@@ -621,14 +619,6 @@ def equidepth_histogram(
                 "cnt",
             )
         )
-        if materialize:
-            # O(columns × bins) rows: cut lineage eagerly and release
-            # every intermediate cache (cells + the prefix sum's internal
-            # persist) — otherwise they leak until driver GC
-            out = out.localCheckpoint(eager=True)
-            for c in caches:
-                c.unpersist(blocking=False)
-        return out
     edges = _wide_quantile_row(
         df,
         columns,

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pyspark_data_drift_detector_spark.functions.lifetime import keep
+
 
 def unpivot_values(df: DataFrame, columns: list[str], keep_nulls: bool = False) -> DataFrame:
     """Melt selected columns to ``(column_name, value:string)`` rows."""
@@ -300,11 +302,9 @@ def top_k_filter(
             .filter(F.col("__rn") <= top_k)
             .drop("__rn")
         )
-    from pyspark import StorageLevel
-
-    # both the cutoff pass and the probe read freq — persist so the
+    # both the cutoff pass and the probe read freq — keep it so the
     # upstream melt+groupBy runs once
-    freq = freq.persist(StorageLevel.MEMORY_AND_DISK)
+    freq = keep(freq)
     cuts = top_k_cutoffs(
         freq, top_k, keys=tuple(keys), salt_partitions=salt_partitions
     )

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.column import Column
 
+from pyspark_data_drift_detector_spark.functions.lifetime import collect_local, keep, owned_run
+
 
 def percent_change_expr(ref: Column, curr: Column) -> Column:
     """group_analyzer.py:516-532 convention."""
@@ -71,21 +73,16 @@ def top_groups(
         F.expr("sum(CAST(__side = 'c' AS BIGINT)) AS curr_rows"),
     )
     # top-N groups via cutoff join (no per-dimension row_number sort task);
-    # persisted: the cutoff pass and the probe both read counts, and column
+    # kept: the cutoff pass and the probe both read counts, and column
     # pruning makes their subtrees non-identical so exchange reuse does NOT
     # apply (verified: unpersisted, the executed plan re-scans the raw
     # table 6x — fatal at scale even though it measures faster on sf0.1's
-    # tiny inputs). bench.py clearCache()s between queries; long-lived
-    # sessions should do the same.
-    from pyspark import StorageLevel
-
+    # tiny inputs).
     from pyspark_data_drift_detector_spark.operators.frequency import (
         join_top_k_membership,
     )
 
-    counts = counts.withColumn(
-        "__tot", F.col("ref_rows") + F.col("curr_rows")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    counts = keep(counts.withColumn("__tot", F.col("ref_rows") + F.col("curr_rows")))
     kept = join_top_k_membership(
         counts,
         counts,
@@ -317,21 +314,19 @@ def group_categorical_stats(
         with_key_totals,
     )
 
-    from pyspark import StorageLevel
-
     keys3 = ("dimension_column", "dimension_value", "column_name")
-    # persisted: every downstream consumer (fused-window chain, or totals +
+    # kept: every downstream consumer (fused-window chain, or totals +
     # pair cutoffs + probe in the salted shape) reads cells, and column
     # pruning makes their subtrees non-identical so exchange reuse does NOT
     # apply (verified: unpersisted, the executed plan re-scans the raw
     # table 8x — fatal at scale even though it measures ~0.8s faster on
     # sf0.1's tiny inputs)
-    cells = cells.persist(StorageLevel.MEMORY_AND_DISK)
+    cells = keep(cells)
     # Catalyst's plan-time estimate for this post-aggregate frame is wildly
     # inflated (the melt's inline multiplies a scan-size upper bound: 43 TB
     # estimated vs 30k actual rows at sf0.1), so the frequency helpers'
     # estimate gate always chooses their salted multi-exchange shape. Cells
-    # is persisted anyway — one count() of the cached frame buys the TRUE
+    # is kept anyway — one count() of the cached frame buys the TRUE
     # cardinality, and below the gate the whole totals→cutoffs→membership→
     # panel chain fuses onto ONE hash(keys3) exchange (window sums + two
     # row_number ranks + the final aggregate all share it). Above the gate
@@ -429,6 +424,7 @@ def group_categorical_stats(
     )
 
 
+@owned_run()
 def group_drift(
     df_ref: DataFrame,
     df_curr: DataFrame,
@@ -446,13 +442,12 @@ def group_drift(
     it is O(dims × k) rows) and pushed into the stats passes as a broadcast
     semi-filter, so the heavy per-group aggregations only ever see rows of
     groups that survive the final top-k join (SURVEY §7.4 risk 5: cap the
-    category fan-out inside Spark, before the expensive work).
+    category fan-out inside Spark, before the expensive work). The result
+    reads only local relations; nothing the call cached outlives it.
     """
     numeric_columns = numeric_columns or []
     categorical_columns = categorical_columns or []
-    groups = top_groups(df_ref, df_curr, dimension, top_k=top_k_groups).localCheckpoint(
-        eager=True
-    )
+    (groups,) = collect_local([top_groups(df_ref, df_curr, dimension, top_k=top_k_groups)])
     keys = groups.select("dimension_column", "dimension_value")
     part_fns = []
     if numeric_columns:
@@ -514,20 +509,11 @@ def group_drift(
         part_fns.append(_categorical_part)
     if not part_fns:
         raise ValueError("no metric columns")
-    # Build AND materialize the metric families concurrently (the
-    # detect_drift convention): the numeric family's two aggregate passes
-    # overlap the categorical family's cells build (whose size-gate count
-    # would otherwise serialize in front of them). Each part is O(groups)
-    # rows — localCheckpoint is cheap and bounds the rollup's plan.
-    if len(part_fns) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(part_fns)) as pool:
-            parts = list(
-                pool.map(lambda fn: fn().localCheckpoint(eager=True), part_fns)
-            )
-    else:
-        parts = [part_fns[0]()]
+    # Build AND materialize the metric families concurrently: the numeric
+    # family's two aggregate passes overlap the categorical family's cells
+    # build (whose size-gate count would otherwise serialize in front of
+    # them). Each part is O(groups) rows.
+    parts = collect_local(part_fns)
     contribs = parts[0]
     for p in parts[1:]:
         contribs = contribs.unionByName(p)

@@ -23,10 +23,10 @@ quantiles are required.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pyspark_data_drift_detector_spark.functions.lifetime import collect_local, keep, owned_run
 from pyspark_data_drift_detector_spark.functions.quoting import ensure_safe_columns, qs
 from pyspark_data_drift_detector_spark.operators.categorical_drift import (
     categorical_drift_from_cells,
@@ -330,16 +330,15 @@ def merged_categorical_drift(
     O(categories) table. Below the salt gate (``frequency._should_salt``)
     that is one lazy plan — the cells exchange plus one window exchange for
     totals and top-k ranks — whose single read of the cells needs no cache.
-    Above it totals, cutoffs and probe each read the cells: they are
-    persisted, the O(columns) result is eagerly local-checkpointed and the
-    cells cache released before returning.
+    Above it totals, cutoffs and probe each read the cells: they are kept
+    for one owned run that returns the O(columns) result as a local
+    relation.
     """
     cells = merged_category_cells(parts, ref_partitions, curr_partitions)
     if not _should_salt(cells):
         return categorical_drift_from_cells(cells, thresholds, top_k)
-    cells = cells.persist(StorageLevel.MEMORY_AND_DISK)
-    out = categorical_drift_from_cells(cells, thresholds, top_k).localCheckpoint(eager=True)
-    cells.unpersist(blocking=False)
+    with owned_run():
+        (out,) = collect_local([categorical_drift_from_cells(keep(cells), thresholds, top_k)])
     return out
 
 

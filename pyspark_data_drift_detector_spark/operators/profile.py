@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pyspark_data_drift_detector_spark.functions.lifetime import collect_local, keep, owned_run
+
 DEFAULT_QUANTILES: tuple[float, ...] = (0.01, 0.05, 0.1, 0.25, 0.5, 0.75, 0.9, 0.95, 0.99)
 
 
@@ -217,36 +219,30 @@ def _quantiles_from_cells(
     cells: DataFrame,
     qlist: list[float],
     sides: dict[str, "F.Column"] | None = None,
-    _persisted: list | None = None,
     _n_cells: int | None = None,
 ) -> DataFrame:
     """Exact quantiles from a pre-built value histogram (the second half
     of :func:`quantiles_by_counts`): distributed prefix sum over the
-    cells, then the order-statistic reconstruction per column.
-    ``_persisted`` collects the prefix sum's internal cache for callers
-    that release intermediates after materializing (see
-    ``bucketed_cumsum``). Below ``SMALL_CUMSUM_CELLS`` the whole
+    cells, then the order-statistic reconstruction per column. The cells
+    and the prefix sum's cache are kept for the enclosing owned run
+    (``functions.lifetime``). Below ``SMALL_CUMSUM_CELLS`` the whole
     reconstruction collapses into ONE NumPy task
     (:func:`_counts_quantile_rows`) — no edge fit, no windows, no
     per-cell re-aggregation; ``_n_cells`` lets a caller that already
     counted the persisted cells skip the gate's count job."""
     sides = sides if sides is not None else {"": F.lit(True)}
-    from pyspark import StorageLevel
-
     from pyspark_data_drift_detector_spark.operators.cumulative import (
         SMALL_CUMSUM_CELLS,
         bucketed_cumsum,
     )
 
-    cells = cells.persist(StorageLevel.MEMORY_AND_DISK)
-    if _persisted is not None:
-        _persisted.append(cells)
+    cells = keep(cells)
     n_cells = _n_cells if _n_cells is not None else cells.count()
     if n_cells <= SMALL_CUMSUM_CELLS:
         return _counts_quantile_rows(cells, qlist, sides)
     cells = bucketed_cumsum(
         cells, "column_name", "value", [f"__{pre}cnt" for pre in sides],
-        _persisted=_persisted, _n_cells=n_cells,
+        _n_cells=n_cells,
     )
     aggs = []
     for pre in sides:
@@ -797,12 +793,12 @@ def robust_profile(
     MAD's deviation histogram is DERIVED from it (|value − median|
     re-grouped over O(distinct) cells — multiplicities add when
     ``v = med ± d`` collide), never a second raw scan. The two small
-    persisted frames (cells, per-column quantiles) are released by
-    ``materialize=True`` (default): the O(columns)-row result is
-    localCheckpointed eagerly and both caches unpersisted, so nothing
-    leaks into long-lived sessions; ``materialize=False`` returns the
-    plan lazily and leaves cache lifetime to the caller (the
-    plan-inspection knob, matching ``key_skew_profile``/``zipf_fit``).
+    kept frames (cells, per-column quantiles) are released by
+    ``materialize=True`` (default): the O(columns)-row result comes back
+    as a local relation from one owned run, so nothing leaks into
+    long-lived sessions; ``materialize=False`` returns the plan lazily and
+    leaves cache lifetime to the caller (the plan-inspection knob,
+    matching ``key_skew_profile``/``zipf_fit``).
 
     Output: ``column_name, n, lo, hi, median, mad, trimmed_mean,
     winsorized_mean, n_trimmed``.
@@ -820,6 +816,11 @@ def robust_profile(
         ensure_safe_columns,
     )
 
+    if quantile_mode == "counts" and materialize:
+        with owned_run():
+            return collect_local(
+                [robust_profile(df, columns, trim, quantile_mode, kll_k, materialize=False)]
+            )[0]
     if not 0.0 < trim < 0.5:
         raise ValueError(f"trim must be in (0, 0.5), got {trim}")
     if not columns:
@@ -832,17 +833,11 @@ def robust_profile(
         # the MAD deviation quantiles both come from it — the deviation
         # histogram is |value − median| re-grouped over O(distinct)
         # cells, so the raw table is never re-scanned for the MAD pass
-        from pyspark import StorageLevel
-
         from pyspark_data_drift_detector_spark.operators.cumulative import (
             SMALL_CUMSUM_CELLS,
         )
 
-        caches: list = []
-        cells = _quantile_cells(df, columns).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        caches.append(cells)
+        cells = keep(_quantile_cells(df, columns))
         # one count gates BOTH rank passes (it materializes the persist
         # every pass needs anyway); below the gate the bounds AND the
         # MAD deviation-histogram median fuse into ONE NumPy task
@@ -852,14 +847,9 @@ def robust_profile(
         n_cells = cells.count()
         counts_fast = n_cells <= SMALL_CUMSUM_CELLS
         if counts_fast:
-            qt = _counts_quantile_rows(
-                cells, [lo_p, 0.5, hi_p], mad=True
-            ).persist(StorageLevel.MEMORY_AND_DISK)
+            qt = keep(_counts_quantile_rows(cells, [lo_p, 0.5, hi_p], mad=True))
         else:
-            qt = _quantiles_from_cells(
-                cells, [lo_p, 0.5, hi_p], _persisted=caches, _n_cells=n_cells
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-        caches.append(qt)
+            qt = keep(_quantiles_from_cells(cells, [lo_p, 0.5, hi_p], _n_cells=n_cells))
         bounds = qt.groupBy().agg(
             *[
                 F.max(F.when(F.col("column_name") == c, F.col("q"))).alias(
@@ -934,7 +924,7 @@ def robust_profile(
                 .agg(F.sum("__cnt").alias("__cnt"))
             )
             mad_row = (
-                _quantiles_from_cells(dev_cells, [0.5], _persisted=caches)
+                _quantiles_from_cells(dev_cells, [0.5])
                 .groupBy()
                 .agg(
                     *[
@@ -954,12 +944,4 @@ def robust_profile(
         f" 'n_trimmed', CAST(__nt{i} AS BIGINT))"
         for i, c in enumerate(columns)
     )
-    out = wide.selectExpr(f"inline(array({structs}))")
-    if quantile_mode == "counts" and materialize:
-        # O(columns) rows: cut lineage eagerly and release every
-        # intermediate cache (cells, qt, AND the prefix sums' internal
-        # persists) — otherwise they leak until driver GC
-        out = out.localCheckpoint(eager=True)
-        for c in caches:
-            c.unpersist(blocking=False)
-    return out
+    return wide.selectExpr(f"inline(array({structs}))")

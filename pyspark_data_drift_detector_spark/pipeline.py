@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from pyspark_data_drift_detector_spark.config import DriftConfig
 from pyspark_data_drift_detector_spark.functions.inference import columns_by_type, infer_column_types
+from pyspark_data_drift_detector_spark.functions.lifetime import collect_local, keep, owned_run
 from pyspark_data_drift_detector_spark.operators.categorical_drift import categorical_drift
 
 RESULT_COLUMNS = [
@@ -58,6 +59,7 @@ def _to_result_rows(drift_df: DataFrame, column_type: str, dimension_id: str = "
     )
 
 
+@owned_run()
 def detect_drift(
     df_ref: DataFrame,
     df_curr: DataFrame,
@@ -65,8 +67,9 @@ def detect_drift(
 ) -> DataFrame:
     """Run the drift-detection pipeline, returning the long result DataFrame.
 
-    The returned plan is lazy — nothing is collected here; callers write it
-    to a sink or collect the O(columns) summary themselves.
+    Every Spark job runs inside this call, in the caller's job group and
+    tags; the result is a local relation of O(columns) rows, and nothing
+    the call cached is left behind (``functions.lifetime``).
     """
     cfg = config if isinstance(config, DriftConfig) else DriftConfig(config or {})
 
@@ -150,8 +153,6 @@ def detect_drift(
     shared_pairs: list[DataFrame] = []
     num_quantiles = (0.01, 0.05, 0.25, 0.5, 0.75, 0.95, 0.99)
     for batch in _batched(num_cols):
-        from pyspark import StorageLevel
-
         from pyspark_data_drift_detector_spark.operators.numeric_drift import (
             numeric_drift_from_joined,
         )
@@ -159,17 +160,17 @@ def detect_drift(
             numeric_profile_pair,
         )
 
-        pair = numeric_profile_pair(
+        pair = keep(numeric_profile_pair(
             df_ref,
             df_curr,
             columns=batch,
             quantiles=num_quantiles,
-            exact_quantiles=bool(cfg.get("exact_quantiles", True)),
+            exact_quantiles=bool(cfg.get("exact_quantiles")),
             quantile_accuracy=int(cfg.get("quantile_accuracy", 10000)),
             quantile_mode=str(cfg.get("quantile_mode", "auto")),
             kll_k=int(cfg.get("kll_k", 800)),
             with_shape=run_distributions,
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        ))
         shared_pairs.append(pair)
         nd = numeric_drift_from_joined(
             pair,
@@ -436,7 +437,7 @@ def detect_drift(
                 df_ref,
                 df_curr,
                 num_cols,
-                exact_quantiles=bool(cfg.get("exact_quantiles", True)),
+                exact_quantiles=bool(cfg.get("exact_quantiles")),
                 quantile_mode=str(cfg.get("quantile_mode", "auto")),
             ).select("column_name", "psi", "stability"),
             "column_name",
@@ -655,19 +656,11 @@ def detect_drift(
     if not results:
         raise ValueError("no analyzable columns in common between ref and curr")
 
-    # Each analyzer family's result is O(columns) rows. Materialize families
-    # individually (localCheckpoint) so each compiles and executes as its own
-    # bounded plan — a single union of 6+ families produces a plan whose
-    # whole-stage-codegen output measurably degrades the JVM (code-cache
-    # pressure) and whose compile time dominates on wide tables. Families are
-    # materialized from concurrent threads: Spark's scheduler interleaves
-    # their jobs, so small stages of one family fill cores another family's
-    # shuffle barrier leaves idle (jobs are independent — no shared state).
-    if cfg.get("materialize_families", True):
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(results)) as pool:
-            results = list(pool.map(lambda r: r.localCheckpoint(eager=True), results))
+    # Each family is materialized as its own bounded plan: one union of 6+
+    # families compiles to whole-stage code that degrades the JVM's code
+    # cache, and concurrent families fill the cores one family's shuffle
+    # barrier leaves idle.
+    results = collect_local(results)
 
     out = results[0]
     for r in results[1:]:

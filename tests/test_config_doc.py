@@ -58,16 +58,14 @@ def test_declared_defaults_match_doc_values():
 
 def test_inline_get_defaults_agree_with_declared():
     """Call-site inline defaults (cfg.get("k", v)) must equal _DEFAULTS[k]
-    wherever both exist — EXCEPT exact_quantiles, where the pipeline's
-    inline True is documented dead code (DriftConfig always merges
-    _DEFAULTS, so the declared False is the effective default)."""
+    wherever both exist."""
     pattern = re.compile(
         r"(?:cfg|config)\.get\(\s*\"([a-z_0-9]+)\",\s*([^)\n]+)\)"
     )
     mismatches = []
     for path in PKG.rglob("*.py"):
         for key, raw in pattern.findall(path.read_text()):
-            if key in ("exact_quantiles",) or key not in _DEFAULTS:
+            if key not in _DEFAULTS:
                 continue
             try:
                 inline = eval(raw, {}, {})  # literals only in practice
@@ -81,6 +79,5 @@ def test_inline_get_defaults_agree_with_declared():
 def test_new_keys_resolve_through_config():
     cfg = DriftConfig({})
     assert cfg.get("analyze_benford") is False
-    assert cfg.get("materialize_families") is True
     assert cfg.get("key_overlap_columns") == []
     assert cfg.get("output_format") == "parquet"

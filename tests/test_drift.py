@@ -75,6 +75,14 @@ def test_category_swap_detected(spark, v1, v3):
     assert drift["p_value"] <= 0.05
 
 
+def test_categorical_drift_empty_ref_has_no_null_ratio(spark, v1):
+    """An empty side has a NULL null ratio instead of dividing by zero."""
+    drift = categorical_drift(v1.limit(0), v1, ["category"]).collect()[0]
+    assert drift["ref_null_ratio"] is None and drift["null_diff"] is None
+    assert drift["curr_null_ratio"] == 0.0
+    assert drift["drift_detected"] and "new_categories" in drift["drift_causes"]
+
+
 def test_drift_score_bounds(spark, v1, v3):
     # property: scores always in [0, 1]
     ref = numeric_profile(v1, quantiles=(0.25, 0.5, 0.75))

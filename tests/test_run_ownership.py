@@ -1,0 +1,140 @@
+"""A drift run owns what it creates: every job it runs carries the
+caller's job group, and it leaves nothing cached behind
+(``functions.lifetime``)."""
+
+from __future__ import annotations
+
+import contextlib
+import datetime
+import json
+import pathlib
+import time
+
+import pytest
+from pyspark.sql import functions as F
+
+from pyspark_data_drift_detector_spark.functions.lifetime import collect_local
+from pyspark_data_drift_detector_spark.operators.groups import group_drift
+from pyspark_data_drift_detector_spark.pipeline import detect_drift
+
+PKG = pathlib.Path(__file__).resolve().parents[1] / "pyspark_data_drift_detector_spark"
+
+
+@pytest.fixture(scope="module")
+def pair(spark):
+    def side(shift, modes):
+        rows = [
+            (float(i % 17) + shift, float((i * 7) % 31), modes[i % len(modes)], ["R", "A"][i % 2])
+            for i in range(400)
+        ]
+        return spark.createDataFrame(rows, "qty double, price double, mode string, flag string")
+
+    return side(0.0, ["AIR", "RAIL", "TRUCK"]), side(3.0, ["AIR", "AIR", "SHIP"])
+
+
+def _cached_rdds(spark) -> set[int]:
+    return {
+        i.id()
+        for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        if i.numCachedPartitions()
+    }
+
+
+@contextlib.contextmanager
+def _time_zone(spark, tz):
+    before = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", before)
+
+
+@contextlib.contextmanager
+def _job_properties(spark, log_dir):
+    """Yield a list that, on exit, holds the local properties every job
+    started inside was submitted with (read back from an event log)."""
+    sc = spark.sparkContext._jsc.sc()
+    jvm = spark.sparkContext._jvm
+    conf = sc.conf().clone().set("spark.eventLog.compress", "false").set("spark.eventLog.rolling.enabled", "false")
+    listener = jvm.org.apache.spark.scheduler.EventLoggingListener(
+        "jobs", jvm.scala.Option.apply(None), jvm.java.net.URI(log_dir.as_uri()), conf, sc.hadoopConfiguration()
+    )
+    listener.start()
+    sc.addSparkListener(listener)
+    props: list[dict] = []
+    try:
+        yield props
+    finally:
+        sc.listenerBus().waitUntilEmpty()
+        sc.removeSparkListener(listener)
+        listener.stop()
+    events = map(json.loads, (log_dir / "jobs").read_text().splitlines())
+    props += [e.get("Properties") or {} for e in events if e["Event"] == "SparkListenerJobStart"]
+
+
+def test_jobs_run_in_the_callers_group_and_nothing_stays_cached(spark, pair, tmp_path):
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ref, curr = pair
+    cached = _cached_rdds(spark)
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("drift-run-ownership", "caller's group")
+    try:
+        with _time_zone(spark, "America/Los_Angeles"), _job_properties(spark, tmp_path) as jobs:
+            rows = detect_drift(ref, curr, {"profile": "standard"}).collect()
+            groups = group_drift(ref, curr, ["mode", "flag"], ["qty", "price"], ["mode"]).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # every job carries the caller's group and the session's confs
+    carried = {(j.get("spark.jobGroup.id"), j.get("spark.sql.session.timeZone")) for j in jobs}
+    assert jobs and carried == {("drift-run-ownership", "America/Los_Angeles")}
+    types = {r["column_type"] for r in rows}
+    assert {"numerical", "categorical", "distribution", "group"} <= types
+    assert groups
+    assert tracker.getJobIdsForGroup("drift-run-ownership")
+    # a difference, not an equality: the status store evicts old jobs
+    assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
+    assert not _cached_rdds(spark) - cached
+
+
+def test_a_builders_query_keeps_its_session_confs_when_another_ends(spark, tmp_path):
+    """Builders run queries on their item's thread. ``quick``'s query
+    starts first and ends while ``slow``'s runs; ``slow``'s later jobs must
+    still carry the session's confs."""
+
+    def sleeping(ms):
+        return F.expr(f"reflect('java.lang.Thread', 'sleep', CAST({ms} AS BIGINT))")
+
+    def quick():
+        spark.range(1, numPartitions=1).select(sleeping(1000)).collect()
+        return spark.range(1)
+
+    def slow():
+        time.sleep(0.3)
+        rows = spark.range(4, numPartitions=4).select((F.col("id") % 2).alias("k"), sleeping(2000).alias("s"))
+        rows.groupBy("k").agg(F.max("s")).collect()
+        return spark.range(1)
+
+    with _time_zone(spark, "America/Los_Angeles"), _job_properties(spark, tmp_path) as jobs:
+        collect_local([quick, slow])
+    assert len(jobs) >= 3
+    assert [j.get("spark.sql.session.timeZone") for j in jobs] == ["America/Los_Angeles"] * len(jobs)
+
+
+def test_run_timestamp_is_the_call_time_under_a_session_time_zone(spark, pair):
+    ref, curr = pair
+    with _time_zone(spark, "America/Los_Angeles"):
+        start = datetime.datetime.now() - datetime.timedelta(seconds=1)
+        rows = detect_drift(ref, curr, {"profile": "summary"}).collect()
+        end = datetime.datetime.now() + datetime.timedelta(seconds=1)
+    assert rows and all(start <= r["run_timestamp"] <= end for r in rows)
+
+
+def test_thread_pools_live_only_in_the_lifetime_module():
+    owners = {
+        str(p.relative_to(PKG))
+        for p in PKG.rglob("*.py")
+        if "ThreadPoolExecutor(" in p.read_text()
+    }
+    assert owners == {"functions/lifetime.py"}

@@ -157,11 +157,28 @@ def test_detect_drift_incremental_leaves_no_cache(spark, state):
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
 
 
+@pytest.mark.parametrize(
+    "ref,curr", [([], ["d1"]), (["absent"], IDS[:2])], ids=["no_partitions", "absent_partition"]
+)
+def test_detect_drift_incremental_scores_an_empty_side(state, ref, curr):
+    """A window with no state rows has NULL null ratios, not a division by
+    zero; the null term scores 0 and every curr category is new."""
+    _, prof, kll, cats = state
+    rows = {
+        r["column_name"]: r
+        for r in detect_drift_incremental(prof, cats, ref, curr, quantile_state=kll).collect()
+    }
+    assert rows["k"]["drift_detected"] and rows["k"]["drift_score"] is not None
+    (k,) = merged_categorical_drift(cats, ref, curr).collect()
+    assert k["ref_null_ratio"] is None and k["null_diff"] is None
+    assert k["curr_null_ratio"] is not None and "new_categories" in k["drift_causes"]
+
+
 def test_merged_categorical_drift_above_salt_gate_releases_cells(spark, state, monkeypatch):
     """Above the salt gate the cells have three readers and are cached for
-    the call; the result is materialized and the cache released (only the
-    result's local checkpoint stays persisted), and the scores match the
-    one-plan path below the gate."""
+    the call; the result is a local relation and the cache is released
+    (nothing stays persisted), and the scores match the one-plan path
+    below the gate."""
     _, _, _, cats = state
     ref, curr = WINDOWS["shared_and_quoted_partition"]
 
@@ -173,7 +190,7 @@ def test_merged_categorical_drift_above_salt_gate_releases_cells(spark, state, m
     before = persistent().size()
     monkeypatch.setattr(frequency, "SALT_SIZE_THRESHOLD_BYTES", -1)
     salted = rows(merged_categorical_drift(cats, ref, curr))
-    assert persistent().size() == before + 1
+    assert persistent().size() == before
     assert small.keys() == salted.keys() == {"k"}
     for f, v in small["k"].items():
         if isinstance(v, float):
