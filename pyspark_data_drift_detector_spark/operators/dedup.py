@@ -10,14 +10,15 @@ Five strategies, ordered by cost/recall tradeoff:
    baseline that oracle-checks the approximate paths.
 3. ``minhash_lsh_pairs`` — MinHash signatures (xxhash64 with per-function
    salt) banded into LSH buckets; candidate pairs verified with exact
-   Jaccard. The 100 TB path: cost is O(corpus) + O(candidates).
+   Jaccard over per-document shingle-hash arrays. The 100 TB path: cost is
+   O(corpus) + O(candidates).
 4. ``simhash`` / ``simhash_pairs`` — 64-bit SimHash with banded blocking for
    Hamming-distance near-dup detection.
 5. ``embedding_neardup_pairs`` — cosine similarity over an embedding column
    (exact all-pairs here; ANN variants live in ``similarity.py``).
 
-All hot paths are built-in expressions (xxhash64, explode, groupBy) — no
-Python UDFs anywhere.
+Hot paths are built-in expressions (xxhash64, explode, groupBy, array
+functions); only ``embedding_neardup_pairs`` runs Python (``applyInPandas``).
 """
 
 from __future__ import annotations
@@ -25,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pyspark_data_drift_detector_spark.functions.lifetime import keep, owned_run
 from pyspark_data_drift_detector_spark.operators.text import tokens_expr
 
 
@@ -35,8 +37,10 @@ def _reuse(df: DataFrame) -> DataFrame:
     signature builds) are referenced 2-3× by the self-join shapes below;
     without persistence Spark recomputes them once per reference (measured
     ~1.5-2x total query cost). MEMORY_AND_DISK so a 100 TB index spills
-    instead of OOMing; Spark's ContextCleaner drops the cache entry when
-    the plan is garbage-collected.
+    instead of OOMing. Nothing releases the entry but ``unpersist`` or
+    ``clearCache``: the session's cache manager holds the plan, so it
+    outlives the caller. ``functions.lifetime.keep`` inside an
+    ``owned_run`` is the form that is released.
     """
     from pyspark import StorageLevel
 
@@ -280,9 +284,15 @@ def minhash_signatures(
     DuckDB SQL, used by the correctness harness to value-verify the banding
     algebra. Same algorithm, same plan shape; only the hash function differs.
     """
+    index, aggs = _signature_aggs(_shingle_index(df, text_col, id_col, k), num_hashes, hash_family)
+    return index.groupBy("id").agg(*aggs)
+
+
+def _signature_aggs(index: DataFrame, num_hashes: int, hash_family: str) -> tuple[DataFrame, list[Column]]:
+    """The shingle index with its per-shingle hash ``h``, and the
+    ``num_hashes`` MinHash aggregates over it (see ``minhash_signatures``)."""
     # SQL-string assembly for the num_hashes aggregate list — see
     # profile._quantile_agg_sql for why
-    index = _shingle_index(df, text_col, id_col, k)
     if hash_family == "md5":
         index = index.withColumn("h", md5_hash60(F.col("shingle")) % MERSENNE31)
         aggs = [
@@ -292,34 +302,35 @@ def minhash_signatures(
     else:
         index = index.withColumn("h", F.xxhash64(F.col("shingle")))
         aggs = [f"min(xxhash64(h, {i})) AS h{i}" for i in range(num_hashes)]
-    return index.groupBy("id").agg(*[F.expr(a) for a in aggs])
+    return index, [F.expr(a) for a in aggs]
 
 
 def _sig_bands(
-    sig: DataFrame, num_hashes: int, bands: int, hash_family: str
+    sig: DataFrame, num_hashes: int, bands: int, hash_family: str, shingles: bool = False
 ) -> DataFrame:
     """Band a signature table (``id, h0..h{n-1}``) into one row per
     (id, band, band_hash). ``md5`` family keeps the raw row-value array
     as the key (oracle-replayable); ``xxhash`` collapses each band to one
-    8-byte hash (the production shuffle key)."""
+    8-byte hash (the production shuffle key).
+
+    ``shingles=True`` passes the signature table's ``shingles`` array
+    through: it is NULL on the band rows, and one extra row per document,
+    with ``band = -1`` and a NULL ``band_hash``, carries it."""
     rows_per_band = num_hashes // bands
-    if hash_family == "md5":
-        band_structs = [
-            "named_struct('band', {b}, 'band_hash', array({hs}))".format(
-                b=b,
-                hs=", ".join(f"h{b * rows_per_band + r}" for r in range(rows_per_band)),
-            )
-            for b in range(bands)
-        ]
-    else:
-        band_structs = [
-            "named_struct('band', {b}, 'band_hash', xxhash64({hs}))".format(
-                b=b,
-                hs=", ".join(f"h{b * rows_per_band + r}" for r in range(rows_per_band)),
-            )
-            for b in range(bands)
-        ]
-    return sig.selectExpr("id", "inline(array(" + ", ".join(band_structs) + "))")
+    key = "array({})" if hash_family == "md5" else "xxhash64({})"
+    fields = [
+        "'band', {b}, 'band_hash', {k}".format(
+            b=b,
+            k=key.format(", ".join(f"h{b * rows_per_band + r}" for r in range(rows_per_band))),
+        )
+        for b in range(bands)
+    ]
+    if shingles:
+        null_key = "CAST(NULL AS array<bigint>)" if hash_family == "md5" else "CAST(NULL AS bigint)"
+        fields = [f"{f}, 'shingles', CAST(NULL AS array<bigint>)" for f in fields]
+        fields.append(f"'band', -1, 'band_hash', {null_key}, 'shingles', shingles")
+    structs = ", ".join(f"named_struct({f})" for f in fields)
+    return sig.selectExpr("id", f"inline(array({structs}))")
 
 
 def minhash_lsh_pairs(
@@ -343,6 +354,11 @@ def minhash_lsh_pairs(
     confirmed with exact Jaccard ≥ threshold, so LSH only affects recall,
     never precision.
 
+    Verification joins each distinct candidate to the two documents' sorted
+    shingle-hash arrays (``xxhash64``), built by the signature aggregate:
+    ``jaccard = |s1∩s2| / (|s1| + |s2| − |s1∩s2|)``, at a cost that tracks
+    the candidates, not shingle popularity.
+
     ``hash_family="md5"`` uses the oracle-replayable signatures AND joins
     bands on the raw row-value array instead of an opaque band hash, so the
     SQL oracle reproduces candidate generation exactly.
@@ -355,9 +371,19 @@ def minhash_lsh_pairs(
     a dropped bucket usually still collides in another, less degenerate
     band; truly boilerplate clusters are better handled by exact dedup
     first). Standard practice in large-scale MinHash dedup pipelines.
+
+    The result is one lazy plan that caches nothing: the band self-join
+    and both verify joins reuse the signature aggregate's shuffle. The
+    arrays ride the band table (``_sig_bands(shingles=True)``) because
+    column pruning would split a separate projection of them into a second
+    aggregate, exploding the shingle index twice.
     """
-    sig = minhash_signatures(df, text_col, id_col, k, num_hashes, hash_family)
-    banded = _sig_bands(sig, num_hashes, bands, hash_family)
+    index, aggs = _signature_aggs(_shingle_index(df, text_col, id_col, k), num_hashes, hash_family)
+    sig = index.groupBy("id").agg(
+        *aggs, F.array_sort(F.collect_list(F.xxhash64("shingle"))).alias("shingles")
+    )
+    rows = _sig_bands(sig, num_hashes, bands, hash_family, shingles=verify)
+    banded = rows.filter(F.col("band") >= 0)
     if max_bucket_size is not None:
         # one extra aggregation over the banded table (already O(docs×bands))
         # buys freedom from quadratic blowup in hot buckets. Bucket sizes
@@ -374,7 +400,6 @@ def minhash_lsh_pairs(
             .filter(F.col("__bn") <= max_bucket_size)
             .drop("__bn")
         )
-    banded = _reuse(banded)
     a = banded.select(F.col("id").alias("id1"), "band", "band_hash")
     b = banded.select(F.col("id").alias("id2"), "band", "band_hash")
     candidates = (
@@ -385,81 +410,59 @@ def minhash_lsh_pairs(
     )
     if not verify:
         return candidates
-    candidates = _reuse(candidates)
-    # verify ONLY candidate pairs: restrict the shingle index to documents
-    # that appear in any candidate (semi-join) before the pairwise join —
-    # at scale candidates ≪ corpus, so verification cost tracks candidate
-    # volume, not corpus volume
-    cand_ids = candidates.select(
-        F.explode(F.array(F.col("id1"), F.col("id2"))).alias("id")
-    ).distinct()
-    index = _reuse(
-        _hashed_shingle_index(df, text_col, id_col, k).join(cand_ids, "id", "left_semi")
-    )
-    sizes = index.groupBy("id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    a = index.select(F.col("id").alias("id1"), "shingle")
-    b = index.select(F.col("id").alias("id2"), "shingle")
-    shared = (
-        a.join(b, "shingle")
-        .filter(F.col("id1") < F.col("id2"))
-        .groupBy("id1", "id2")
-        .agg(F.count(F.lit(1)).alias("shared"))
-        .join(candidates, ["id1", "id2"], "left_semi")
-    )
-    out = (
-        shared.join(sizes.withColumnRenamed("id", "id1").withColumnRenamed("n_shingles", "n1"), "id1")
-        .join(sizes.withColumnRenamed("id", "id2").withColumnRenamed("n_shingles", "n2"), "id2")
-        .withColumn("jaccard", F.col("shared") / (F.col("n1") + F.col("n2") - F.col("shared")))
+    arrays = rows.filter(F.col("band") < 0)
+    s1 = arrays.select(F.col("id").alias("id1"), F.col("shingles").alias("s1"))
+    s2 = arrays.select(F.col("id").alias("id2"), F.col("shingles").alias("s2"))
+    shared = F.size(F.array_intersect("s1", "s2"))
+    return (
+        candidates.join(s1, "id1")
+        .join(s2, "id2")
+        .select("id1", "id2", (shared / (F.size("s1") + F.size("s2") - shared)).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
-    return out.select("id1", "id2", "jaccard")
 
 
-#: Edge-count gate for the single-task components fast path: below this,
-#: the whole edge list (2 ints/row, ≤ ~32 MB at the gate) is solved in
-#: ONE vectorized NumPy task instead of the distributed pointer-jumping
-#: loop whose per-iteration driver-job overhead dominates small graphs.
-#: Above it, the distributed loop — the 100 TB path — is unchanged.
+#: Edge-count gate for solving components on the driver: below it the
+#: edge list (2 ints/row, ≤ ~32 MB at the gate) is read once as Arrow and
+#: solved in vectorized NumPy, instead of the distributed pointer-jumping
+#: loop whose per-iteration jobs dominate small graphs. Above it, the
+#: distributed loop — the 100 TB path — is unchanged.
 SMALL_COMPONENTS_EDGES = 2_000_000
 
 
-def _components_one_task(edges: DataFrame, id_type: str) -> DataFrame:
-    """Exact connected components of a gathered edge list in one task:
-    the same min-label pointer-jumping algorithm as the distributed
-    loop, run to its fixed point in vectorized NumPy (``np.minimum.at``
-    neighbor-min + ``label[label]`` doubling per round), so the output
-    is identical — ``(id, cluster_id = min reachable id)`` for every id
-    appearing in ≥1 edge. Rows with a NULL endpoint are ignored (a NULL
-    never equi-joins in the distributed loop either)."""
+def _components_on_driver(edges: DataFrame) -> DataFrame:
+    """Exact connected components of a small edge list, solved on the
+    driver with the distributed loop's min-label pointer jumping run to its
+    fixed point in NumPy (``np.minimum.at`` neighbor-min + ``label[label]``
+    doubling), so the output is identical: ``(id, cluster_id = min
+    reachable id)`` per id in ≥1 edge, where an edge with a NULL endpoint
+    links nothing. Returns a local relation, which holds no block."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    def fn(pdf):
-        import numpy as np
-        import pandas as pd
-
-        valid = pdf["id1"].notna() & pdf["id2"].notna()
-        if not valid.all():
-            pdf = pdf[valid]
-        a = np.asarray(pdf["id1"].to_numpy(), dtype=np.int64)
-        b = np.asarray(pdf["id2"].to_numpy(), dtype=np.int64)
-        ids = np.unique(np.concatenate([a, b]))
-        ia = np.searchsorted(ids, a)
-        ib = np.searchsorted(ids, b)
-        lab = np.arange(ids.size, dtype=np.int64)
-        while True:
-            nl = lab.copy()
-            np.minimum.at(nl, ia, lab[ib])
-            np.minimum.at(nl, ib, lab[ia])
-            nl = np.minimum(nl, nl[nl])
-            if np.array_equal(nl, lab):
-                break
-            lab = nl
-        return pd.DataFrame({"id": ids, "cluster_id": ids[lab]})
-
-    return edges.groupBy().applyInPandas(
-        fn, f"id {id_type}, cluster_id {id_type}"
-    )
+    table = edges.toArrow()
+    ids = np.unique(np.concatenate([pc.drop_null(table.column(c)).to_numpy() for c in ("id1", "id2")]))
+    linked = table.drop_null()
+    a, b = (linked.column(c).to_numpy() for c in ("id1", "id2"))
+    ia = np.searchsorted(ids, a)
+    ib = np.searchsorted(ids, b)
+    lab = np.arange(ids.size, dtype=np.int64)
+    while True:
+        nl = lab.copy()
+        np.minimum.at(nl, ia, lab[ib])
+        np.minimum.at(nl, ib, lab[ia])
+        nl = np.minimum(nl, nl[nl])
+        if np.array_equal(nl, lab):
+            break
+        lab = nl
+    id_type = table.schema.field("id1").type
+    arrow = pa.table({"id": pa.array(ids).cast(id_type), "cluster_id": pa.array(ids[lab]).cast(id_type)})
+    idt = edges.schema["id1"].dataType.simpleString()
+    return edges.sparkSession.createDataFrame(arrow, f"id {idt}, cluster_id {idt}")
 
 
+@owned_run()
 def neardup_clusters(
     pairs: DataFrame,
     max_iter: int = 20,
@@ -489,6 +492,10 @@ def neardup_clusters(
     appears in at least one pair (singletons are their own cluster by
     definition and need no row).
 
+    Up to ``SMALL_COMPONENTS_EDGES`` integral-id edges are solved on the
+    driver (``_components_on_driver``). The counted edges are kept only
+    until the call returns; the distributed loop's checkpoints stay.
+
     The edge index is re-partitioned to match its ACTUAL size before the
     loop: the pair table is orders of magnitude smaller than the corpus
     that produced it (near-dups are the exception, not the rule), but it
@@ -499,32 +506,16 @@ def neardup_clusters(
     first iteration needs anyway); ~1M edges per partition keeps
     partitions ≈16 MB at cluster scale.
     """
-    # Persist the DIRECTED edges and count them first: the symmetrized
-    # union references the (expensive) pair pipeline in BOTH branches, so
-    # materializing the union uncached would run that pipeline twice. The
-    # count also sizes the compact index.
-    edges = _reuse(pairs.select("id1", "id2"))
+    # Keep the DIRECTED edges and count them: the gather or the symmetrized
+    # union (which references the pair pipeline in BOTH branches) then reads
+    # the kept edges; the count gates the driver solve and sizes the loop.
+    edges = keep(pairs.select("id1", "id2"))
     n_edges = edges.count()
     from pyspark.sql import types as T
 
-    idt = edges.schema["id1"].dataType
-    if n_edges <= SMALL_COMPONENTS_EDGES and isinstance(idt, T.IntegralType):
-        # Small-graph fast path: the distributed loop costs ~5 driver
-        # jobs PER ITERATION (3 joins + checkpoint + convergence
-        # aggregate) — pure scheduling overhead when the whole edge list
-        # is a few MB. One task runs the SAME min-label pointer-jumping
-        # algorithm in vectorized NumPy over the gathered edges
-        # (np.minimum.at + label[label] doubling, iterated to the exact
-        # fixed point), so labels are identical: min reachable id per
-        # node, every node that appears in ≥1 pair. Size-gated on the
-        # edge count already in hand (the convention of the
-        # shuffle_hash gate below); above the gate, or for non-integral
-        # id types, the distributed loop is unchanged. The checkpoint
-        # bounds what the gather reads (≤ gate rows) and releases the
-        # pair pipeline's cache before returning a lazy plan.
-        compact = edges.localCheckpoint(eager=True)
-        edges.unpersist()
-        return _components_one_task(compact, idt.simpleString())
+    if n_edges <= SMALL_COMPONENTS_EDGES and isinstance(edges.schema["id1"].dataType, T.IntegralType):
+        # the loop's ~5 jobs PER ITERATION are pure scheduling overhead here
+        return _components_on_driver(edges)
     # sized purely from the exact edge count the materializing count just
     # produced — no .rdd.getNumPartitions() probe (it forces DataFrame→RDD
     # conversion and a full physical-planning round-trip on the driver)

@@ -91,7 +91,10 @@ def temporal_drift(
 ) -> DataFrame:
     """Per-column temporal drift between two snapshots, one job.
 
-    ``columns`` must cast to timestamp. Output (one row per column):
+    ``columns`` are read as ``try_cast(... AS TIMESTAMP)``: a value that
+    does not parse counts as NULL. A string column typed temporal from a
+    sample may hold such values, and a hard cast would raise on them
+    under ANSI mode. Output (one row per column):
     ``column_name, ref_n, curr_n, ref_min, ref_max, curr_min, curr_max``
     (epoch seconds, double), ``mean_shift_days, range_change,
     null_ratio_change, dow_js, drift_detected, drift_causes``.
@@ -109,11 +112,11 @@ def temporal_drift(
         cond = f"__side = '{tag}'"
         aggs.append(f"sum(CAST({cond} AS BIGINT)) AS `__{pre}_rows`")
         for c in columns:
-            ts = f"CAST(`{c}` AS TIMESTAMP)"
+            ts = f"try_cast(`{c}` AS TIMESTAMP)"
             ep = f"CASE WHEN {cond} THEN CAST({ts} AS DOUBLE) END"
             aggs += [
                 f"count({ep}) AS `{pre}__{c}__n`",
-                f"sum(CAST(({cond} AND `{c}` IS NULL) AS BIGINT)) AS `{pre}__{c}__nulls`",
+                f"sum(CAST(({cond} AND {ts} IS NULL) AS BIGINT)) AS `{pre}__{c}__nulls`",
                 f"min({ep}) AS `{pre}__{c}__min`",
                 f"max({ep}) AS `{pre}__{c}__max`",
                 f"avg({ep}) AS `{pre}__{c}__mean`",

@@ -127,6 +127,25 @@ def test_temporal_drift_nulls_and_dow_shift(spark):
     assert same["mean_shift_days"] == 0.0 and same["dow_js"] == 0.0
 
 
+def test_detect_drift_reads_a_sampled_temporal_guess_leniently(spark):
+    """A string column of mostly 4-digit codes samples as temporal (a
+    4-digit string parses as a year). The temporal family must count the
+    short codes that do not parse as NULL instead of raising
+    CAST_INVALID_INPUT over the full table under ANSI mode."""
+    from pyspark_data_drift_detector_spark.functions.inference import infer_column_types
+    from pyspark_data_drift_detector_spark.pipeline import RESULT_COLUMNS, detect_drift
+
+    df = spark.range(2000).selectExpr("CAST(1000 + id % 9000 AS STRING) AS code").unionByName(
+        spark.range(30).selectExpr("CAST(id * 7 AS STRING) AS code")
+    )
+    assert infer_column_types(df)["code"] == "temporal"
+    out = detect_drift(df, df, {"profile": "summary"})
+    rows = out.collect()
+    assert out.columns == RESULT_COLUMNS
+    (temporal,) = [r for r in rows if r["column_name"] == "code" and r["column_type"] == "temporal"]
+    assert not temporal["drift_detected"]
+
+
 def test_robust_outlier_drift_resists_contamination(spark):
     """The property that motivates MAD over z-score: planting extreme
     outliers in the CURRENT side must raise the robust outlier rate —

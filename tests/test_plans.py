@@ -629,6 +629,27 @@ def test_dedup_plan_construction_no_rdd_probe(spark, sf_dir):
     assert n_clustered >= 0
 
 
+@pytest.mark.parametrize("hash_family", ["xxhash", "md5"])
+def test_minhash_lsh_verified_plan(docs, hash_family):
+    """The verified LSH plan caches nothing, joins nothing on a shingle,
+    and explodes and aggregates the shingle index once: both sides of the
+    band self-join and both verify joins reuse that aggregate's shuffle."""
+    import re
+
+    from pyspark_data_drift_detector_spark.operators.dedup import minhash_lsh_pairs
+    from pyspark_data_drift_detector_spark.plans.inspect import simple_plan
+
+    out = minhash_lsh_pairs(docs, threshold=0.3, hash_family=hash_family)
+    assert "InMemoryRelation" not in out._jdf.queryExecution().optimizedPlan().toString()
+    out.collect()
+    # the final adaptive plan, where a reused shuffle shows as one line
+    plan = simple_plan(out).split("== Initial Plan ==")[0]
+    assert not re.search(r"Join \[[^\]]*shingle", plan)
+    assert len(re.findall(r"Generate explode\(", plan)) == 1
+    shuffles = [ln for ln in plan.splitlines() if "Exchange hashpartitioning(id#" in ln]
+    assert sum("ReusedExchange" not in ln for ln in shuffles) == 1 < len(shuffles)
+
+
 def test_round6_operators_prune_scans(spark, sf_dir):
     """The new operators' scans must read only the columns they use —
     a scan shipping the full row width for a 2-3 column computation is

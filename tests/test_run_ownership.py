@@ -8,14 +8,21 @@ import contextlib
 import datetime
 import json
 import pathlib
+import re
 import time
 
 import pytest
 from pyspark.sql import functions as F
 
 from pyspark_data_drift_detector_spark.functions.lifetime import collect_local
+from pyspark_data_drift_detector_spark.operators.dedup import (
+    dedup_survivors,
+    minhash_lsh_pairs,
+    neardup_clusters,
+)
 from pyspark_data_drift_detector_spark.operators.groups import group_drift
 from pyspark_data_drift_detector_spark.pipeline import detect_drift
+from pyspark_data_drift_detector_spark.sources.snapshot import write_results
 
 PKG = pathlib.Path(__file__).resolve().parents[1] / "pyspark_data_drift_detector_spark"
 
@@ -138,3 +145,63 @@ def test_thread_pools_live_only_in_the_lifetime_module():
         if "ThreadPoolExecutor(" in p.read_text()
     }
     assert owners == {"functions/lifetime.py"}
+
+
+def test_a_dedup_ingest_runs_in_the_callers_group_and_caches_nothing(spark, tmp_path):
+    """The near-dup ingest (LSH pairs, clusters, survivors, results sink)
+    runs every job in the caller's group and leaves no persisted RDD."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    words = [f"w{i}" for i in range(400)]
+    rows = []
+    for family in range(20):
+        base = words[family * 20:family * 20 + 20]
+        rows += [(family * 10 + copy, " ".join(base[:copy] + base[copy + 1:])) for copy in range(3)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    persistent = len(sc._jsc.getPersistentRDDs())
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("dedup-run-ownership", "caller's group")
+    try:
+        clusters = neardup_clusters(minhash_lsh_pairs(docs, threshold=0.5))
+        write_results(dedup_survivors(docs, clusters), str(tmp_path / "survivors"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert tracker.getJobIdsForGroup("dedup-run-ownership")
+    assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
+    assert len(sc._jsc.getPersistentRDDs()) == persistent
+    kept = sorted(r["doc_id"] for r in spark.read.parquet(str(tmp_path / "survivors")).collect())
+    assert kept == [family * 10 for family in range(20)]
+
+
+#: The calls that cache a frame, and the files allowed to make them
+#: outside ``functions/lifetime.py`` with their current count. A change
+#: may lower a count or drop a file, never raise or add one.
+CACHING_CALL = re.compile(r"\.persist\(|\.localCheckpoint\(|\.checkpoint\(|\.cache\(\)|\b_reuse\(")
+CACHING_ALLOWLIST = {
+    "corpus_pipeline.py": 3,
+    "events_pipeline.py": 1,
+    "operators/constraints.py": 4,
+    "operators/corpus.py": 8,
+    "operators/correlation.py": 2,
+    "operators/dedup.py": 15,
+    "operators/graph.py": 13,
+    "operators/multimodal.py": 2,
+    "operators/parallelism.py": 2,
+    "operators/quality.py": 3,
+    "operators/similarity.py": 4,
+    "operators/temporal.py": 7,
+    "operators/text.py": 1,
+    "sources/snapshot.py": 1,
+    "streaming/state_tables.py": 4,
+}
+
+
+def test_caching_calls_live_in_the_lifetime_module_or_the_allowlist():
+    counts = {
+        name: n
+        for p in PKG.rglob("*.py")
+        if (name := str(p.relative_to(PKG))) != "functions/lifetime.py"
+        and (n := len(CACHING_CALL.findall(p.read_text())))
+    }
+    # equal, not at most: a file that loses calls lowers its entry here
+    assert counts == CACHING_ALLOWLIST

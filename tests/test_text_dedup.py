@@ -203,11 +203,11 @@ def test_neardup_clusters_pointer_jumping_log_convergence(spark, monkeypatch):
         neardup_clusters(chain, max_iter=1).collect()
 
 
-def test_components_one_task_matches_distributed_loop(spark, monkeypatch):
-    """The small-graph one-task fast path must label exactly like the
+def test_components_on_driver_match_distributed_loop(spark, monkeypatch):
+    """The driver-side solve below the gate must label exactly like the
     distributed pointer-jumping loop: same rows, same min-id labels —
-    on a shape mixing a long chain, disjoint pairs, a star and a
-    duplicate/reversed edge."""
+    on a shape mixing a long chain, disjoint pairs, a star, a
+    duplicate/reversed edge and a NULL endpoint — and keep the id type."""
     from pyspark_data_drift_detector_spark.operators import dedup as dedup_mod
     from pyspark_data_drift_detector_spark.operators.dedup import neardup_clusters
 
@@ -216,12 +216,71 @@ def test_components_one_task_matches_distributed_loop(spark, monkeypatch):
         + [(100, 101), (200, 201), (201, 202)]    # disjoint pairs
         + [(300, 301), (300, 302), (300, 303)]    # star
         + [(301, 300), (1, 0)]                    # reversed duplicates
+        + [(400, None)]                           # NULL endpoint: a singleton
     )
-    pairs = spark.createDataFrame(edges, "id1 long, id2 long")
-    fast = {(r["id"], r["cluster_id"]) for r in neardup_clusters(pairs).collect()}
-    monkeypatch.setattr(dedup_mod, "SMALL_COMPONENTS_EDGES", -1)
-    loop = {(r["id"], r["cluster_id"]) for r in neardup_clusters(pairs).collect()}
-    assert fast == loop and len(fast) == 50
+    for id_type in ("bigint", "int"):
+        pairs = spark.createDataFrame(edges, f"id1 {id_type}, id2 {id_type}")
+        fast_df = neardup_clusters(pairs)
+        assert [f.dataType.simpleString() for f in fast_df.schema] == [id_type, id_type]
+        fast = {(r["id"], r["cluster_id"]) for r in fast_df.collect()}
+        with monkeypatch.context() as m:
+            m.setattr(dedup_mod, "SMALL_COMPONENTS_EDGES", -1)
+            loop = {(r["id"], r["cluster_id"]) for r in neardup_clusters(pairs).collect()}
+        assert fast == loop and len(fast) == 51
+    assert neardup_clusters(spark.createDataFrame([], "id1 long, id2 long")).collect() == []
+
+
+def _lsh_parity_docs(spark):
+    """Seeded near-dup families plus the edge cases verification must
+    survive: NULL and empty text, a one-token document, repeated tokens,
+    exact duplicates and a boilerplate family big enough to fill a bucket."""
+    import random
+
+    rng = random.Random(20)
+    vocab = [f"w{i}" for i in range(400)]
+    rows, next_id = [], 0
+    for _ in range(30):
+        base = [rng.choice(vocab) for _ in range(rng.randint(8, 30))]
+        for _ in range(rng.randint(1, 4)):
+            words = [w for w in base if rng.random() > 0.1] or base
+            rows.append((next_id, " ".join(words)))
+            next_id += 1
+    boiler = "all rights reserved contact us terms of service privacy policy"
+    rows += [(next_id + i, boiler) for i in range(12)]
+    next_id += 12
+    rows += [
+        (next_id, None), (next_id + 1, None),
+        (next_id + 2, ""), (next_id + 3, "   "),
+        (next_id + 4, "solo"), (next_id + 5, "solo"),
+        (next_id + 6, "la la la la la la"), (next_id + 7, "la la la la"),
+        (next_id + 8, "x y z x y z x y z"), (next_id + 9, "x y z x y z"),
+    ]
+    rng.shuffle(rows)
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+@pytest.mark.parametrize("hash_family", ["xxhash", "md5"])
+@pytest.mark.parametrize("max_bucket_size", [None, 5])
+def test_minhash_lsh_verify_matches_exact_jaccard_on_candidates(spark, hash_family, max_bucket_size):
+    """The array verifier gives exact shingle Jaccard: on the LSH
+    candidates, ``minhash_lsh_pairs`` equals ``jaccard_pairs`` restricted
+    to those candidates, pair for pair and value for value."""
+    docs = _lsh_parity_docs(spark)
+    threshold = 0.4
+    kw = dict(threshold=threshold, hash_family=hash_family, max_bucket_size=max_bucket_size)
+    candidates = minhash_lsh_pairs(docs, verify=False, **kw)
+    exact = {
+        (r["id1"], r["id2"]): r["jaccard"]
+        for r in jaccard_pairs(docs, threshold=threshold)
+        .join(candidates, ["id1", "id2"], "left_semi")
+        .collect()
+    }
+    verified = {(r["id1"], r["id2"]): r["jaccard"] for r in minhash_lsh_pairs(docs, **kw).collect()}
+    assert len(exact) > 20
+    assert verified.keys() == exact.keys()
+    assert all(verified[p] == pytest.approx(exact[p], abs=1e-12) for p in exact)
+    by_text = dict(docs.collect())
+    assert all(verified[p] == 1.0 for p in verified if by_text[p[0]] == by_text[p[1]])
 
 
 def test_embedding_neardup_lsh_recall(spark):
