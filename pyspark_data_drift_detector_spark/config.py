@@ -90,7 +90,6 @@ _DEFAULTS: dict[str, Any] = {
     "analyze_correlations": True,
     "analyze_groups": True,
     "analyze_feature_importance": False,
-    "analyze_outliers": True,
     # the Temporal analyzer the reference's architecture doc promises but
     # never implements (SURVEY §1.1) — mean-time shift / range change /
     # day-of-week JS per temporal column

@@ -1,6 +1,7 @@
 """What a drift run caches, and the threads it fans out on: ``keep``
 persists a frame for the enclosing ``owned_run``, which unpersists it on
-exit, and ``collect_local`` materializes results on threads that carry
+exit, ``owned_result`` gives a standalone builder a run of its own, and
+``collect_local`` materializes results on threads that carry
 the caller's job group and tags, as local relations that hold no block."""
 
 from __future__ import annotations
@@ -33,6 +34,24 @@ def owned_run():
         for df in _kept.get():
             df.unpersist(blocking=False)
         _kept.reset(token)
+
+
+def owned_result(build):
+    """Decorate a builder so nothing it keeps outlives its result: inside an
+    ``owned_run`` what it keeps joins that run; outside one it runs in its
+    own, and a result built over kept frames returns as a local relation."""
+
+    @functools.wraps(build)
+    def wrapper(*args, **kwargs) -> DataFrame:
+        if _kept.get() is not None:
+            return build(*args, **kwargs)
+        with owned_run():
+            df = build(*args, **kwargs)
+            if _kept.get():
+                (df,) = collect_local([df])
+        return df
+
+    return wrapper
 
 
 def collect_local(items: list) -> list[DataFrame]:

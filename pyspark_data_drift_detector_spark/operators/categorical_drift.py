@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.column import Column
 
-from pyspark_data_drift_detector_spark.functions.lifetime import keep
+from pyspark_data_drift_detector_spark.functions.lifetime import owned_result
 
 DEFAULT_CAT_THRESHOLDS: dict[str, float] = {
     "category_threshold": 0.03,
@@ -180,16 +180,12 @@ def categorical_drift(
     """
     from pyspark_data_drift_detector_spark.operators.frequency import pair_frequency_cells
 
-    # Everything derives from this ONE cells aggregation, which is KEPT
-    # (O(distinct categories)) because totals, both top-k cutoffs, and the
-    # probe side all reference it — unpersisted, each reference re-runs the
-    # melt+groupBy over both snapshots. Null-category rows are NOT filtered
-    # out of the probe (null counts derive from the same pass); every
-    # null-sensitive expression guards on value IS NOT NULL.
-    cells = keep(pair_frequency_cells(df_ref, df_curr, columns))
-    return categorical_drift_from_cells(cells, thresholds, top_k, p_value_mode)
+    return categorical_drift_from_cells(
+        pair_frequency_cells(df_ref, df_curr, columns), thresholds, top_k, p_value_mode
+    )
 
 
+@owned_result
 def categorical_drift_from_cells(
     cells: DataFrame,
     thresholds: dict[str, float] | None = None,
@@ -202,67 +198,38 @@ def categorical_drift_from_cells(
     (nullable = the null-count row), ref_cnt, curr_cnt`` — as produced by
     ``pair_frequency_cells``, or re-derived from any additive category
     state (``mergeable.merged_category_cells``: the incremental path whose
-    windows merge WITHOUT re-scanning data). Small cells frames are read
-    once (totals and top-k ranks share one window); above the salt gate
-    totals, cutoffs and probe each read them, so callers should persist.
+    windows merge WITHOUT re-scanning data). Totals and top-k membership
+    come from ``frequency.with_top_k``: below its size gate the cells are
+    read once; above it they are kept, and a call outside an ``owned_run``
+    returns its O(columns) result as a local relation.
     """
     th = dict(DEFAULT_CAT_THRESHOLDS)
     th.update(thresholds or {})
-    is_null_val = F.col("value").isNull()
-    from pyspark_data_drift_detector_spark.operators.frequency import (
-        _should_salt,
-        pair_top_k_cutoffs,
-        with_key_totals,
-    )
+    from pyspark_data_drift_detector_spark.operators.frequency import with_top_k
 
-    # totals via with_key_totals; derived expressions assembled as SQL
-    # strings — see profile._quantile_agg_sql for why (py4j round-trips
-    # dominated driver-side plan construction)
-    nn = with_key_totals(
-        cells,
-        {
+    # a NULL value is never ranked: it enters the ranks with count 0, which
+    # is never a member and ranks after every positive count. Derived
+    # expressions are SQL strings — see profile._quantile_agg_sql for why
+    # (py4j round-trips dominated driver-side plan construction)
+    sides = ("ref", "curr")
+    nn = with_top_k(
+        cells.selectExpr(
+            "*", *[f"CASE WHEN value IS NULL THEN 0 ELSE {pre}_cnt END AS {pre}" for pre in sides]
+        ),
+        top_k,
+        count_cols=sides,
+        sums={
             "ref_n_rows": F.sum("ref_cnt"),
             "curr_n_rows": F.sum("curr_cnt"),
-            "ref_total": F.sum(F.when(~is_null_val, F.col("ref_cnt")).otherwise(F.lit(0))),
-            "curr_total": F.sum(F.when(~is_null_val, F.col("curr_cnt")).otherwise(F.lit(0))),
+            "ref_total": F.sum("ref"),
+            "curr_total": F.sum("curr"),
         },
-    )
-    if top_k is None:
-        rank_ok = "true"
-    elif not _should_salt(cells):
-        # small frames: top-k membership is row_number() in the SAME
-        # column_name window as the totals — one exchange, no cutoff
-        # aggregate or broadcast join (groups.group_categorical_stats'
-        # shape). Null rows sort last, so non-null ranks are the ranks
-        # among the non-null cells, exactly as the cutoff path computes.
-        rank_ok = (
-            "row_number() OVER (PARTITION BY column_name ORDER BY value IS NULL,"
-            f" {{pre}}_cnt DESC, value ASC) <= {int(top_k)}"
-        )
-    else:
-        # top-k membership via ONE pair-cutoff pass (both sides share the
-        # salted/global shuffles) broadcast back, so no task sorts more
-        # than ~1/salt of one column's category set. The cutoff replays
-        # `rank <= k` exactly: the (cnt DESC, value ASC) order is total
-        # because values are unique per column, and ranks run over the
-        # NON-null cells; the null guard preserves the rest.
-        cuts = pair_top_k_cutoffs(cells.filter(~is_null_val), top_k)
-        nn = nn.join(F.broadcast(cuts), "column_name", "left")
-        rank_ok = (
-            "coalesce(({pre}_cnt > {pre}_cnt_cut_cnt) OR ({pre}_cnt = {pre}_cnt_cut_cnt"
-            " AND value <= {pre}_cnt_cut_value), false)"
-        )
-    nn = nn.selectExpr(
+    ).selectExpr(
         "*",
         *[
-            e
-            for pre in ("ref", "curr")
-            for e in (
-                f"CASE WHEN value IS NOT NULL AND {pre}_total > 0"
-                f" THEN {pre}_cnt / {pre}_total ELSE 0.0D END AS {pre}_freq",
-                f"value IS NOT NULL AND {pre}_cnt > 0 AND {rank_ok.format(pre=pre)}"
-                f" AS member_{pre}",
-            )
+            f"CASE WHEN value IS NOT NULL AND {pre}_total > 0"
+            f" THEN {pre}_cnt / {pre}_total ELSE 0.0D END AS {pre}_freq"
+            for pre in sides
         ],
     )
 

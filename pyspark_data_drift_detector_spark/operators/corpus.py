@@ -307,8 +307,8 @@ def bigram_logprob(
     # unpersisted, the executed plan re-explodes the corpus bigram stream
     # several times — fatal at scale).  The result here is O(documents)
     # rows, too big for the checkpoint-and-release pattern, so the cache
-    # lives until the caller clears it (bench.py clearCache()s between
-    # queries; long-lived sessions should do the same).
+    # lives until the caller clears it (perfbench drops every cached block
+    # between operations; long-lived sessions should do the same).
     bi_counts = (
         bi.groupBy("t1", "t2")
         .agg(F.expr("count(1) AS c_bi"))

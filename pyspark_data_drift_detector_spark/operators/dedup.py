@@ -79,12 +79,15 @@ def affine_params(num_hashes: int, seed: int = 61) -> list[tuple[int, int]]:
 
 
 def shingles_expr(text: Column, k: int = 3) -> Column:
-    """Distinct k-token shingles (space-joined) of a text column."""
+    """Distinct k-token shingles (space-joined) of a text column. NULL text
+    has none (NULL, which explodes to no rows); blank text has the one
+    empty shingle."""
     toks = tokens_expr(text)
     n = F.size(toks)
     idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, k)))
+    return F.when(
+        text.isNotNull(),
+        F.array_distinct(F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, k)))),
     )
 
 

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pyspark_data_drift_detector_spark.functions.lifetime import keep
+from pyspark_data_drift_detector_spark.functions.lifetime import keep, owned_result
 
 
 def unpivot_values(df: DataFrame, columns: list[str], keep_nulls: bool = False) -> DataFrame:
@@ -52,29 +52,34 @@ def with_key_totals(
     sums: dict[str, "F.Column"],
     keys: tuple[str, ...] = ("column_name",),
 ) -> DataFrame:
-    """Attach per-key totals via ``groupBy`` + broadcast join.
+    """Attach per-key totals: a per-key window below the size gate
+    (``_should_salt``), a ``groupBy`` + broadcast join above it.
 
-    NOT an unpartitioned window: ``Window.partitionBy(key)`` buffers every
-    cell of a key in ONE task, which for a high-cardinality categorical
-    column at 100 TB is the same single-task cliff as the cumulative-sum
-    windows (``operators.cumulative``). The totals table is O(keys) rows —
-    always broadcastable — and the groupBy's partial aggregation is
-    map-side, so the fix costs one tiny extra shuffle and removes the
-    per-key buffering entirely. Results are bit-identical (integer sums).
-
-    Small frames (per the ``top_k_cutoffs`` size gate) take the per-key
-    window directly: identical sums, and the plan drops the totals
-    aggregate + broadcast-build job — downstream windows on the same keys
-    then share one exchange.
+    Above the gate an unpartitioned ``Window.partitionBy(key)`` would
+    buffer every cell of a key in ONE task, which for a high-cardinality
+    categorical column at 100 TB is the same single-task cliff as the
+    cumulative-sum windows (``operators.cumulative``). The totals table is
+    O(keys) rows — always broadcastable — and the groupBy's partial
+    aggregation is map-side. Below it the window drops the totals
+    aggregate + broadcast-build job, and downstream windows on the same
+    keys share its exchange. Both shapes give the same rows.
     """
-    key_list = list(keys)
     if not _should_salt(cells):
-        w = Window.partitionBy(*key_list)
+        w = Window.partitionBy(*keys)
         return cells.select("*", *[expr.over(w).alias(name) for name, expr in sums.items()])
-    totals = cells.groupBy(*key_list).agg(
-        *[expr.alias(name) for name, expr in sums.items()]
+    totals = cells.groupBy(*keys).agg(*[expr.alias(name) for name, expr in sums.items()])
+    return _join_per_key(cells, totals, keys)
+
+
+def _join_per_key(cells: DataFrame, per_key: DataFrame, keys: tuple[str, ...]) -> DataFrame:
+    """Broadcast-join an O(keys) table onto ``cells``, matching NULL keys as
+    the per-key window's partitioning does."""
+    renamed = per_key.select(
+        *[F.col(k).alias(f"__key{i}") for i, k in enumerate(keys)],
+        *[c for c in per_key.columns if c not in keys],
     )
-    return cells.join(F.broadcast(totals), key_list)
+    on = [F.col(k).eqNullSafe(F.col(f"__key{i}")) for i, k in enumerate(keys)]
+    return cells.join(F.broadcast(renamed), on).drop(*[f"__key{i}" for i in range(len(keys))])
 
 
 def frequency_table(
@@ -108,12 +113,12 @@ def frequency_table(
     return counts
 
 
-#: Above this plan-time size estimate for the cells frame, the top-k
-#: builders run their salted two-phase shape (bounded per-task state); at
-#: or below it, a single per-key window is safe — the whole frame fits in
-#: one task with room to spare — and skips one exchange + one sort. The
+#: Above this plan-time size estimate for a cells frame, per-key totals
+#: and top-k ranks run their salted shapes (bounded per-task state); at or
+#: below it, one per-key window is safe — the whole frame fits in one task
+#: with room to spare — and skips exchanges, sorts and broadcast joins. The
 #: estimate comes from Catalyst statistics (file sizes), costs no job, and
-#: fails toward the salted path.
+#: fails toward the salted shapes.
 SALT_SIZE_THRESHOLD_BYTES = 1 << 30
 
 
@@ -123,196 +128,122 @@ def _should_salt(cells: DataFrame) -> bool:
     return estimated_size_bytes(cells) > SALT_SIZE_THRESHOLD_BYTES
 
 
-def top_k_cutoffs(
+def with_top_k(
     cells: DataFrame,
-    k: int,
+    k: int | None,
     keys: tuple[str, ...] = ("column_name",),
-    count_col: str = "cnt",
+    count_cols: tuple[str, ...] = ("cnt",),
     value_col: str = "value",
-    salt_partitions: int | None = None,
+    sums: dict[str, "F.Column"] | None = None,
 ) -> DataFrame:
-    """Per-key k-th cutoff in ``(count DESC, value ASC)`` order, with
-    BOUNDED per-task state.
+    """Rank each key's cells and attach per-key totals — the one builder.
 
-    A plain ``row_number`` over ``Window.partitionBy(key)`` sorts every
-    cell of a key in one task — the same 100 TB cliff as the cumulative
-    windows. Here each task handles one ``(key, salt)`` slice (≈1/S of a
-    key's cells): any global top-k row is necessarily in its slice's local
-    top-k, so the exact ranking runs on the ≤ k·S survivors per key — a
-    tiny table. Returns one row per key: ``keys..., cut_cnt, cut_value``
-    where the cutoff is the k-th row (or the last row when the key has
-    fewer than k cells). Membership test replaying ``row_number() <= k``
-    exactly (cell values are unique per key, so the order is total)::
+    Adds the ``sums`` totals (see ``with_key_totals``) and, per count
+    column ``c``, a boolean ``member_<c>``: ``c > 0`` and the cell ranks
+    ≤ ``k`` within its key by ``(c DESC, value ASC)``. Cell values are
+    unique per key, so the order is total; a NULL value ranks first at
+    its count level (Spark's ascending order). ``k=None`` keeps every
+    positive cell. A caller that must never rank a cell passes its count
+    as 0.
 
-        cnt > cut_cnt OR (cnt = cut_cnt AND value <= cut_value)
-
-    ``salt_partitions=None`` (default) gates the local phase on Catalyst's
-    plan-time size estimate: small frames (≤ ``SALT_SIZE_THRESHOLD_BYTES``)
-    skip straight to the per-key window — results are identical, the plan
-    loses one exchange and one sort. Pass an int to force either shape.
+    Below the size gate (``_should_salt``) totals and ranks come from one
+    ``Window.partitionBy(keys)``: one exchange, and the cells are read
+    once. Above it a plain per-key ``row_number`` would sort every cell of
+    a key in one task — the 100 TB cliff. There each task ranks one
+    ``(key, salt)`` slice instead: every global top-k cell is in its
+    slice's local top-k, so the exact rank-k cutoff comes from the ≤ k·32
+    survivors per key, and membership is a comparison against the
+    broadcast cutoff. That shape reads the cells three times (totals,
+    cutoffs, probe), so it keeps them for the caller's ``owned_run``.
     """
-    if salt_partitions is None:
-        salt_partitions = 32 if _should_salt(cells) else 1
-    order = [F.desc(count_col), F.asc(value_col)]
-    local = cells.select(*keys, count_col, value_col)
-    if salt_partitions > 1:
-        salt = F.pmod(F.xxhash64(F.col(value_col)), F.lit(salt_partitions))
-        wlocal = Window.partitionBy(*keys, salt).orderBy(*order)
-        local = local.withColumn("__lrn", F.row_number().over(wlocal)).filter(
-            F.col("__lrn") <= k
-        )
-    wglobal = Window.partitionBy(*keys).orderBy(*order)
-    ranked = local.withColumn("__rn", F.row_number().over(wglobal)).filter(
-        F.col("__rn") <= k
-    )
-    return ranked.groupBy(*keys).agg(
-        F.max_by(F.col(count_col), F.col("__rn")).alias("cut_cnt"),
-        F.max_by(F.col(value_col), F.col("__rn")).alias("cut_value"),
-    )
-
-
-def pair_top_k_cutoffs(
-    cells: DataFrame,
-    k: int,
-    keys: tuple[str, ...] = ("column_name",),
-    count_cols: tuple[str, str] = ("ref_cnt", "curr_cnt"),
-    value_col: str = "value",
-    salt_partitions: int | None = None,
-) -> DataFrame:
-    """Both sides' top-k cutoffs in ONE pass.
-
-    The ref- and curr-ordered windows share the same ``(keys, salt)`` and
-    ``(keys)`` partitionings, so Spark plans consecutive Window operators
-    over a single exchange each (two sorts, one shuffle) instead of two
-    full pipelines. Output: ``keys..., <c>_cut_cnt, <c>_cut_value`` per
-    count column. See ``top_k_cutoffs`` for the bounded-state rationale
-    and the ``salt_partitions=None`` size-estimate gate.
-    """
-    if salt_partitions is None:
-        salt_partitions = 32 if _should_salt(cells) else 1
-    # SQL-string assembly — see profile._quantile_agg_sql for why
-    keylist = ", ".join(f"`{x}`" for x in keys)
-    local = cells.select(*keys, *count_cols, value_col)
-    if salt_partitions > 1:
-        slim = local.selectExpr(
-            "*",
-            f"pmod(xxhash64(`{value_col}`), {int(salt_partitions)}) AS __salt",
-            *[
-                f"row_number() OVER (PARTITION BY {keylist}, "
-                f"pmod(xxhash64(`{value_col}`), {int(salt_partitions)})"
-                f" ORDER BY `{c}` DESC, `{value_col}` ASC) AS `__lrn_{c}`"
-                for c in count_cols
-            ],
-        )
-        local = slim.filter(" OR ".join(f"__lrn_{c} <= {k}" for c in count_cols))
-    # the survivor set contains every side's TRUE top-k (each such row is
-    # in its salt slice's local top-k), and any non-top-k survivor ranks
-    # after all k of them, so rank-k within the survivors IS the true
-    # cutoff for each side
-    local = local.selectExpr(
-        "*",
-        *[
-            f"row_number() OVER (PARTITION BY {keylist}"
-            f" ORDER BY `{c}` DESC, `{value_col}` ASC) AS `__rn_{c}`"
+    salted = k is not None and _should_salt(cells)
+    if salted:
+        cells = keep(cells)
+    out = with_key_totals(cells, sums, keys) if sums else cells
+    v = f"`{value_col}`"
+    if k is None:
+        ranked = {c: "true" for c in count_cols}
+    elif not salted:
+        keylist = ", ".join(f"`{x}`" for x in keys)
+        ranked = {
+            c: f"row_number() OVER (PARTITION BY {keylist} ORDER BY `{c}` DESC, {v} ASC)"
+            f" <= {int(k)}"
             for c in count_cols
-        ],
-    )
-    aggs = [
-        F.expr(
-            f"max(CASE WHEN `__rn_{c}` <= {k} THEN named_struct("
-            f"'rn', `__rn_{c}`, 'cnt', `{c}`, 'val', `{value_col}`) END)"
-            f" AS `__cut_{c}`"
-        )
-        for c in count_cols
-    ]
-    cuts = local.groupBy(*keys).agg(*aggs)
-    return cuts.selectExpr(
-        *[f"`{x}`" for x in keys],
-        *[
-            e
+        }
+    else:
+        out = _join_per_key(out, _salted_cutoffs(cells, k, keys, count_cols, value_col), keys)
+        # replays the rank order: a NULL value sorts before every non-NULL
+        # value at its count level, and never after a NULL cutoff value
+        ranked = {
+            c: f"`{c}` > `__cut_{c}`.cnt OR (`{c}` = `__cut_{c}`.cnt"
+            f" AND ({v} IS NULL OR coalesce({v} <= `__cut_{c}`.val, false)))"
             for c in count_cols
-            for e in (
-                f"`__cut_{c}`.cnt AS `{c}_cut_cnt`",
-                f"`__cut_{c}`.val AS `{c}_cut_value`",
-            )
-        ],
-    )
+        }
+    out = out.selectExpr("*", *[f"`{c}` > 0 AND ({r}) AS `member_{c}`" for c, r in ranked.items()])
+    return out.drop(*[f"__cut_{c}" for c in count_cols]) if salted else out
 
 
-def cutoff_member_expr(count_col: "F.Column", value_col: "F.Column") -> "F.Column":
-    """The membership predicate matching ``top_k_cutoffs``'s contract.
-
-    Null-aware to replay Spark's ``asc`` null placement exactly: in the
-    ``(cnt DESC, value ASC)`` window order a NULL value sorts FIRST within
-    its count level, so a null row is a member whenever the cutoff sits at
-    its count level, and a non-null row never beats a null cutoff at the
-    same level (``value <= NULL`` → NULL → false via the coalesce)."""
-    return (count_col > F.col("cut_cnt")) | (
-        (count_col == F.col("cut_cnt"))
-        & (
-            value_col.isNull()
-            | F.coalesce(value_col <= F.col("cut_value"), F.lit(False))
-        )
-    )
-
-
-def join_top_k_membership(
-    enr: DataFrame,
+def _salted_cutoffs(
     cells: DataFrame,
     k: int,
     keys: tuple[str, ...],
-    count_col: str,
-    member_name: str,
-    value_col: str = "value",
+    count_cols: tuple[str, ...],
+    value_col: str,
 ) -> DataFrame:
-    """Attach a boolean ``member_name`` = "this row is in its key's top-k
-    by ``(count DESC, value ASC)`` and has a positive count" — via a
-    broadcast cutoff join instead of a per-key ``row_number`` window.
-    ``cells`` is the frame the ranks are computed over (usually ``enr``
-    itself, or a filtered view when some rows are excluded from ranking).
-    """
-    cuts = top_k_cutoffs(cells, k, keys=keys, count_col=count_col, value_col=value_col)
-    joined = enr.join(F.broadcast(cuts), list(keys), "left")
-    member = (F.col(count_col) > 0) & F.coalesce(
-        cutoff_member_expr(F.col(count_col), F.col(value_col)), F.lit(False)
+    """Per key and count column ``c``, the rank-k cell as ``__cut_<c>``
+    (a ``cnt, val`` struct; the last cell when the key has fewer than k),
+    ranked with bounded per-task state. All count columns share the salted
+    and the per-key exchange (two sorts each, one shuffle each)."""
+    # SQL-string assembly — see profile._quantile_agg_sql for why
+    keylist = ", ".join(f"`{x}`" for x in keys)
+    v = f"`{value_col}`"
+    salt = f"pmod(xxhash64({v}), 32)"
+    local = cells.select(*keys, *count_cols, value_col).selectExpr(
+        "*",
+        *[
+            f"row_number() OVER (PARTITION BY {keylist}, {salt}"
+            f" ORDER BY `{c}` DESC, {v} ASC) AS `__lrn_{c}`"
+            for c in count_cols
+        ],
     )
-    return joined.withColumn(member_name, member).drop("cut_cnt", "cut_value")
+    # the survivors hold every count column's TRUE top-k (each such cell is
+    # in its slice's local top-k), and any other survivor ranks after all k
+    # of them, so rank k among the survivors IS the true cutoff
+    survivors = local.filter(" OR ".join(f"`__lrn_{c}` <= {int(k)}" for c in count_cols))
+    ranked = survivors.selectExpr(
+        *[f"`{x}`" for x in keys],
+        *[f"`{c}`" for c in count_cols],
+        v,
+        *[
+            f"row_number() OVER (PARTITION BY {keylist}"
+            f" ORDER BY `{c}` DESC, {v} ASC) AS `__rn_{c}`"
+            for c in count_cols
+        ],
+    )
+    return ranked.groupBy(*keys).agg(
+        *[
+            F.expr(
+                f"max(CASE WHEN `__rn_{c}` <= {int(k)} THEN named_struct("
+                f"'rn', `__rn_{c}`, 'cnt', `{c}`, 'val', {v}) END) AS `__cut_{c}`"
+            )
+            for c in count_cols
+        ]
+    )
 
 
+@owned_result
 def top_k_filter(
     freq: DataFrame,
     top_k: int,
     extra_keys: list[str] | None = None,
-    salt_partitions: int | None = None,
 ) -> DataFrame:
     """Keep the k most frequent categories per column (tie-break on value).
 
     Separate from ``frequency_table`` so a full table can be computed once
-    and truncated as a second consumer. Implemented as a broadcast join
-    against ``top_k_cutoffs`` — no task ever sorts a whole column's
-    category set (see that docstring). Small frames (per the same size
-    gate) take one direct ``row_number`` window instead: identical rows,
-    and the plan drops the persist + cutoff join + probe pass.
+    and truncated as a second consumer; ranks come from ``with_top_k``.
     """
-    keys = ["column_name", *(extra_keys or [])]
-    if salt_partitions is None and not _should_salt(freq):
-        w = Window.partitionBy(*keys).orderBy(F.desc("cnt"), F.asc("value"))
-        return (
-            freq.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= top_k)
-            .drop("__rn")
-        )
-    # both the cutoff pass and the probe read freq — keep it so the
-    # upstream melt+groupBy runs once
-    freq = keep(freq)
-    cuts = top_k_cutoffs(
-        freq, top_k, keys=tuple(keys), salt_partitions=salt_partitions
-    )
-    return (
-        freq.join(F.broadcast(cuts), keys)
-        .filter(cutoff_member_expr(F.col("cnt"), F.col("value")))
-        .drop("cut_cnt", "cut_value")
-    )
+    keys = ("column_name", *(extra_keys or []))
+    return with_top_k(freq, top_k, keys).filter("member_cnt").drop("member_cnt")
 
 
 def pair_frequency_cells(

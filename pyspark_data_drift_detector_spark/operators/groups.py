@@ -28,7 +28,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.column import Column
 
-from pyspark_data_drift_detector_spark.functions.lifetime import collect_local, keep, owned_run
+from pyspark_data_drift_detector_spark.functions.lifetime import (
+    collect_local,
+    owned_result,
+    owned_run,
+)
 
 
 def percent_change_expr(ref: Column, curr: Column) -> Column:
@@ -49,6 +53,7 @@ def _as_dims(dimension) -> list[str]:
     return [dimension] if isinstance(dimension, str) else list(dimension)
 
 
+@owned_result
 def top_groups(
     df_ref: DataFrame,
     df_curr: DataFrame,
@@ -72,29 +77,18 @@ def top_groups(
         F.expr("sum(CAST(__side = 'r' AS BIGINT)) AS ref_rows"),
         F.expr("sum(CAST(__side = 'c' AS BIGINT)) AS curr_rows"),
     )
-    # top-N groups via cutoff join (no per-dimension row_number sort task);
-    # kept: the cutoff pass and the probe both read counts, and column
-    # pruning makes their subtrees non-identical so exchange reuse does NOT
-    # apply (verified: unpersisted, the executed plan re-scans the raw
-    # table 6x — fatal at scale even though it measures faster on sf0.1's
-    # tiny inputs).
-    from pyspark_data_drift_detector_spark.operators.frequency import (
-        join_top_k_membership,
-    )
+    from pyspark_data_drift_detector_spark.operators.frequency import with_top_k
 
-    counts = keep(counts.withColumn("__tot", F.col("ref_rows") + F.col("curr_rows")))
-    kept = join_top_k_membership(
-        counts,
-        counts,
+    ranked = with_top_k(
+        counts.withColumn("rows", F.col("ref_rows") + F.col("curr_rows")),
         top_k,
         ("dimension_column",),
-        "__tot",
-        "__keep",
+        ("rows",),
         value_col="dimension_value",
     )
     return (
-        kept.filter(F.col("__keep"))
-        .drop("__keep", "__tot")
+        ranked.filter("member_rows")
+        .drop("rows", "member_rows")
         .withColumn(
             "row_pct_change", percent_change_expr(F.col("ref_rows"), F.col("curr_rows"))
         )
@@ -119,7 +113,7 @@ def _dim_melt(
     wide ``agg`` avoid the ×columns row multiplication entirely.
 
     ``keep_groups`` (columns ``dimension_column, dimension_value``) restricts
-    the melt to those groups via a broadcast inner join BEFORE the column
+    the melt to those groups via a broadcast semi join BEFORE the column
     explode. With a high-cardinality dimension (e.g. a 5%-rule supplier key)
     this is the difference between aggregating percentile sketches for every
     group and only for the top-k that survive the final join anyway — the
@@ -141,7 +135,7 @@ def _dim_melt(
         melted = melted.join(
             F.broadcast(keep_groups.select("dimension_column", "dimension_value")),
             on=["dimension_column", "dimension_value"],
-            how="inner",
+            how="left_semi",
         )
     if value_cast is None:
         return melted
@@ -279,15 +273,7 @@ def group_numeric_stats(
     )
 
 
-#: Cells-count gate for the fused single-exchange categorical panel: at or
-#: below this many (group, column, value) cells, the per-key window chain
-#: is safe (a key's cells fit one task with room to spare) and the whole
-#: totals→top-k-membership→panel pipeline shares ONE hash exchange. Above
-#: it, the salted bounded-per-task-state shape runs — the 100 TB path.
-#: Same convention as dedup.SMALL_COMPONENTS_EDGES.
-GROUP_CELLS_WINDOW_MAX = 2_000_000
-
-
+@owned_result
 def group_categorical_stats(
     df_ref: DataFrame,
     df_curr: DataFrame,
@@ -298,7 +284,9 @@ def group_categorical_stats(
 ) -> DataFrame:
     """Per-(group, categorical column) top-k frequency drift, one shuffle.
 
-    ``dimension`` may be a single column or a list (shared scan+shuffle)."""
+    ``dimension`` may be a single column or a list (shared scan+shuffle).
+    Totals and top-k membership come from ``frequency.with_top_k``; a NULL
+    category value is ranked like any other cell."""
     melted = (
         _dim_melt(df_ref, df_curr, _as_dims(dimension), columns, "string", keep_groups=keep_groups)
         .withColumnRenamed("v", "value")
@@ -309,88 +297,20 @@ def group_categorical_stats(
         F.sum((F.col("__side") == "r").cast("long")).alias("ref_cnt"),
         F.sum((F.col("__side") == "c").cast("long")).alias("curr_cnt"),
     )
-    from pyspark_data_drift_detector_spark.operators.frequency import (
-        pair_top_k_cutoffs,
-        with_key_totals,
+    from pyspark_data_drift_detector_spark.operators.frequency import with_top_k
+
+    enr = (
+        with_top_k(
+            cells,
+            top_k,
+            ("dimension_column", "dimension_value", "column_name"),
+            ("ref_cnt", "curr_cnt"),
+            sums={"ref_total": F.sum("ref_cnt"), "curr_total": F.sum("curr_cnt")},
+        )
+        .withColumn("ref_freq", F.col("ref_cnt") / F.greatest(F.col("ref_total"), F.lit(1)))
+        .withColumn("curr_freq", F.col("curr_cnt") / F.greatest(F.col("curr_total"), F.lit(1)))
     )
-
-    keys3 = ("dimension_column", "dimension_value", "column_name")
-    # kept: every downstream consumer (fused-window chain, or totals +
-    # pair cutoffs + probe in the salted shape) reads cells, and column
-    # pruning makes their subtrees non-identical so exchange reuse does NOT
-    # apply (verified: unpersisted, the executed plan re-scans the raw
-    # table 8x — fatal at scale even though it measures ~0.8s faster on
-    # sf0.1's tiny inputs)
-    cells = keep(cells)
-    # Catalyst's plan-time estimate for this post-aggregate frame is wildly
-    # inflated (the melt's inline multiplies a scan-size upper bound: 43 TB
-    # estimated vs 30k actual rows at sf0.1), so the frequency helpers'
-    # estimate gate always chooses their salted multi-exchange shape. Cells
-    # is kept anyway — one count() of the cached frame buys the TRUE
-    # cardinality, and below the gate the whole totals→cutoffs→membership→
-    # panel chain fuses onto ONE hash(keys3) exchange (window sums + two
-    # row_number ranks + the final aggregate all share it). Above the gate
-    # the salted bounded-state shape runs unchanged — a key's cells must
-    # never be buffered in one window task at 100 TB.
-    if cells.count() <= GROUP_CELLS_WINDOW_MAX:
-        from pyspark.sql import Window
-
-        w3 = Window.partitionBy(*keys3)
-        # row_number() <= k over (cnt DESC, value ASC) is exactly the
-        # cutoff-join membership predicate (cell values are unique per
-        # key, so the order is total — frequency.top_k_cutoffs contract);
-        # NULL values sort FIRST under ASC, same as the null-aware
-        # predicate replays.
-        enr = (
-            cells.repartition(*[F.col(c) for c in keys3])
-            .select(
-                "*",
-                F.sum("ref_cnt").over(w3).alias("ref_total"),
-                F.sum("curr_cnt").over(w3).alias("curr_total"),
-                F.row_number()
-                .over(w3.orderBy(F.col("ref_cnt").desc(), F.col("value").asc()))
-                .alias("__rn_ref"),
-                F.row_number()
-                .over(w3.orderBy(F.col("curr_cnt").desc(), F.col("value").asc()))
-                .alias("__rn_curr"),
-            )
-            .withColumn("ref_freq", F.col("ref_cnt") / F.greatest(F.col("ref_total"), F.lit(1)))
-            .withColumn("curr_freq", F.col("curr_cnt") / F.greatest(F.col("curr_total"), F.lit(1)))
-            .selectExpr(
-                "* EXCEPT (__rn_ref, __rn_curr)",
-                *[
-                    f"{pre}_cnt > 0 AND __rn_{pre} <= {int(top_k)} AS member_{pre}"
-                    for pre in ("ref", "curr")
-                ],
-            )
-        )
-    else:
-        enr = (
-            with_key_totals(
-                cells,
-                {"ref_total": F.sum("ref_cnt"), "curr_total": F.sum("curr_cnt")},
-                keys=keys3,
-            )
-            .withColumn("ref_freq", F.col("ref_cnt") / F.greatest(F.col("ref_total"), F.lit(1)))
-            .withColumn("curr_freq", F.col("curr_cnt") / F.greatest(F.col("curr_total"), F.lit(1)))
-        )
-        # top-k membership via ONE pair-cutoff pass broadcast back (no
-        # per-group-cell row_number sort task). Null category values sort
-        # FIRST under asc(value) — replayed by the null-aware membership
-        # predicate.
-        cuts = pair_top_k_cutoffs(cells, top_k, keys=keys3)
-        enr = enr.join(F.broadcast(cuts), list(keys3), "left").selectExpr(
-            "* EXCEPT (ref_cnt_cut_cnt, ref_cnt_cut_value,"
-            " curr_cnt_cut_cnt, curr_cnt_cut_value)",
-            *[
-                f"{pre}_cnt > 0 AND coalesce(({pre}_cnt > {pre}_cnt_cut_cnt) OR"
-                f" ({pre}_cnt = {pre}_cnt_cut_cnt AND (value IS NULL OR"
-                f" coalesce(value <= {pre}_cnt_cut_value, false))), false)"
-                f" AS member_{pre}"
-                for pre in ("ref", "curr")
-            ],
-        )
-    common = "member_ref AND member_curr"
+    common = "member_ref_cnt AND member_curr_cnt"
     out = enr.groupBy("dimension_column", "dimension_value", "column_name").agg(
         *[
             F.expr(e)
@@ -402,11 +322,12 @@ def group_categorical_stats(
                 f"sum(CAST(({common}) AS BIGINT)) AS common_categories_count",
                 f"sum(CASE WHEN {common} THEN abs(curr_freq - ref_freq) END)"
                 " AS __freq_drift_sum",
-                "sum(CAST((member_curr AND NOT member_ref) AS BIGINT)) AS new_categories_count",
-                "sum(CAST((member_ref AND NOT member_curr) AS BIGINT))"
+                "sum(CAST((member_curr_cnt AND NOT member_ref_cnt) AS BIGINT))"
+                " AS new_categories_count",
+                "sum(CAST((member_ref_cnt AND NOT member_curr_cnt) AS BIGINT))"
                 " AS disappeared_categories_count",
-                "sum(CAST(member_ref AS BIGINT)) AS ref_distinct_count",
-                "sum(CAST(member_curr AS BIGINT)) AS curr_distinct_count",
+                "sum(CAST(member_ref_cnt AS BIGINT)) AS ref_distinct_count",
+                "sum(CAST(member_curr_cnt AS BIGINT)) AS curr_distinct_count",
             )
         ]
     )
@@ -511,8 +432,7 @@ def group_drift(
         raise ValueError("no metric columns")
     # Build AND materialize the metric families concurrently: the numeric
     # family's two aggregate passes overlap the categorical family's cells
-    # build (whose size-gate count would otherwise serialize in front of
-    # them). Each part is O(groups) rows.
+    # build. Each part is O(groups) rows.
     parts = collect_local(part_fns)
     contribs = parts[0]
     for p in parts[1:]:

@@ -26,12 +26,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pyspark_data_drift_detector_spark.functions.lifetime import collect_local, keep, owned_run
 from pyspark_data_drift_detector_spark.functions.quoting import ensure_safe_columns, qs
 from pyspark_data_drift_detector_spark.operators.categorical_drift import (
     categorical_drift_from_cells,
 )
-from pyspark_data_drift_detector_spark.operators.frequency import _should_salt, with_key_totals
+from pyspark_data_drift_detector_spark.operators.frequency import with_key_totals
 from pyspark_data_drift_detector_spark.operators.numeric_drift import numeric_drift_from_joined
 
 
@@ -327,19 +326,15 @@ def merged_categorical_drift(
     sides' aligned cells come from ``merged_category_cells`` (a tiny
     aggregate over the persisted additive state, no data re-scan), then
     the standard scoring (``categorical_drift_from_cells``) runs on the
-    O(categories) table. Below the salt gate (``frequency._should_salt``)
+    O(categories) table. Below the size gate (``frequency.with_top_k``)
     that is one lazy plan — the cells exchange plus one window exchange for
     totals and top-k ranks — whose single read of the cells needs no cache.
-    Above it totals, cutoffs and probe each read the cells: they are kept
-    for one owned run that returns the O(columns) result as a local
-    relation.
+    Above it the scoring keeps the cells for its own run and returns the
+    O(columns) result as a local relation.
     """
-    cells = merged_category_cells(parts, ref_partitions, curr_partitions)
-    if not _should_salt(cells):
-        return categorical_drift_from_cells(cells, thresholds, top_k)
-    with owned_run():
-        (out,) = collect_local([categorical_drift_from_cells(keep(cells), thresholds, top_k)])
-    return out
+    return categorical_drift_from_cells(
+        merged_category_cells(parts, ref_partitions, curr_partitions), thresholds, top_k
+    )
 
 
 def partitioned_distinct(

@@ -169,7 +169,7 @@ def key_skew_profile(
     Scale shape: the count table groups by ``(column, value)`` so no
     reducer sees more than one key's rows; the scalar moments (max, Σ,
     Σ²) partial-aggregate map-side; the top-k sum uses the same
-    size-gated salted two-phase as ``frequency.top_k_cutoffs`` — a
+    size-gated salted two-phase as ``frequency.with_top_k`` — a
     column's counts are never sorted in a single task unless the frame
     is plan-time small.
 

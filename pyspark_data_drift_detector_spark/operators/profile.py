@@ -442,7 +442,8 @@ def numeric_profile(
     """Long-format numeric profile: one row per column, one Spark job total.
 
     ``quantile_mode``: ``"auto"`` (sort-based exact when ``exact_quantiles``
-    else approx sketch), ``"counts"`` — exact via the value-histogram
+    else approx sketch), ``"exact"`` (sort-based exact whatever
+    ``exact_quantiles`` says), ``"counts"`` — exact via the value-histogram
     reconstruction (``quantiles_by_counts``), the preferred exact path at
     scale for bounded-cardinality columns — or ``"kll"``, the mergeable
     Datasketches KLL sketch (see ``_quantile_agg_expr``), the preferred
@@ -506,7 +507,7 @@ def numeric_profile(
     # (_sorted_quantile_row — measured 3.7-4.3s → 1.1-2.0s for this
     # profile at sf0.1, identical values).
     wide = df.selectExpr(*aggs)
-    if qlist and quantile_mode == "auto" and exact_quantiles:
+    if qlist and (quantile_mode == "exact" or (quantile_mode == "auto" and exact_quantiles)):
         qrow = _sorted_quantile_row(
             df, [(f"{c}__q", c, None, None) for c in cols], qlist
         )
@@ -616,7 +617,7 @@ def numeric_profile_pair(
 
     # quantile subtree split from the codegen-able stats — see numeric_profile
     wide = tagged.selectExpr(*aggs)
-    if qlist and quantile_mode == "auto" and exact_quantiles:
+    if qlist and (quantile_mode == "exact" or (quantile_mode == "auto" and exact_quantiles)):
         # exact mode: ONE NumPy gather over the side-tagged union serves
         # both sides' per-column quantile arrays (identical values to the
         # conditional percentile aggregates it replaces)

@@ -150,7 +150,7 @@ def cap_per_group(
     Selection order is ``(uniform_variate(id), id)``: layout-independent
     (the same rows win on any partitioning or append order) and unbiased
     within the group. The rank runs the size-gated two-phase shape of
-    ``frequency.top_k_cutoffs``: large frames first rank per
+    ``frequency.with_top_k``: large frames first rank per
     ``(group, salt-slice)`` and keep each slice's top ``n`` (any global
     top-``n`` row is in its slice's local top-``n``), so no task ever
     sorts a whole hot group; the exact rank then runs over the ≤ n·S

@@ -323,42 +323,42 @@ def test_counts_quantile_fast_path_matches_distributed(spark):
     assert fast == dist
 
 
-def test_top_k_cutoffs_match_row_number(spark):
-    """The cutoff-join membership must replay row_number() <= k EXACTLY on
-    adversarial cells: count ties, null category values (which sort FIRST
-    under asc), keys with fewer than k cells, and zero counts."""
+def test_top_k_cutoffs_match_row_number(spark, monkeypatch):
+    """``with_top_k``'s membership must replay row_number() <= k EXACTLY in
+    both shapes on adversarial cells: count ties, null category values
+    (which sort FIRST under asc), a NULL key, keys with fewer than k cells,
+    and zero counts."""
     import random
 
     from pyspark.sql import Window
 
-    from pyspark_data_drift_detector_spark.operators.frequency import (
-        join_top_k_membership,
-    )
+    from pyspark_data_drift_detector_spark.functions.lifetime import owned_run
+    from pyspark_data_drift_detector_spark.operators import frequency
+    from pyspark_data_drift_detector_spark.operators.frequency import with_top_k
 
     rng = random.Random(17)
     rows = []
-    for key in ("a", "b", "tiny", "nullish"):
-        n = {"a": 40, "b": 25, "tiny": 2, "nullish": 12}[key]
+    sizes = {"a": 40, "b": 25, "tiny": 2, "nullish": 12, None: 6}
+    for key, n in sizes.items():
         for i in range(n):
             # cells are grouped: exactly one row per (key, value), with at
             # most one NULL-valued row per key
             val = None if key == "nullish" and i == 0 else f"v{i:03d}"
             rows.append((key, val, rng.choice([0, 1, 1, 2, 5, 5, 5, 9])))
     cells = spark.createDataFrame(rows, "k string, value string, cnt long")
+    win = Window.partitionBy("k").orderBy(F.desc("cnt"), F.asc("value"))
+    ranked = cells.withColumn("rn", F.row_number().over(win)).collect()
 
-    for top_k in (1, 3, 7, 50):
-        got = {
-            (r["k"], r["value"]): r["m"]
-            for r in join_top_k_membership(
-                cells, cells, top_k, ("k",), "cnt", "m"
-            ).collect()
-        }
-        win = Window.partitionBy("k").orderBy(F.desc("cnt"), F.asc("value"))
-        want = {
-            (r["k"], r["value"]): (r["cnt"] > 0) and (r["rn"] <= top_k)
-            for r in cells.withColumn("rn", F.row_number().over(win)).collect()
-        }
-        assert got == want, f"top_k={top_k}: {[(x, got[x], want[x]) for x in got if got[x] != want[x]]}"
+    for threshold in (1 << 30, -1):
+        monkeypatch.setattr(frequency, "SALT_SIZE_THRESHOLD_BYTES", threshold)
+        for top_k in (1, 3, 7, 50):
+            with owned_run():
+                got = {
+                    (r["k"], r["value"]): r["member_cnt"]
+                    for r in with_top_k(cells, top_k, ("k",)).collect()
+                }
+            want = {(r["k"], r["value"]): (r["cnt"] > 0) and (r["rn"] <= top_k) for r in ranked}
+            assert got == want, (threshold, top_k, [x for x in want if got.get(x) != want[x]])
 
 
 def test_equidepth_histogram_balanced_and_tied(spark):
@@ -422,7 +422,7 @@ def test_group_categorical_salted_path_matches_fused(pair, monkeypatch):
     group_categorical_stats) must stay value-identical to the fused
     window branch the gate routes small inputs to — force it via the
     gate and compare row sets."""
-    from pyspark_data_drift_detector_spark.operators import groups
+    from pyspark_data_drift_detector_spark.operators import frequency
 
     ref, curr = pair
 
@@ -435,5 +435,5 @@ def test_group_categorical_salted_path_matches_fused(pair, monkeypatch):
         )
 
     fused = run()
-    monkeypatch.setattr(groups, "GROUP_CELLS_WINDOW_MAX", -1)
+    monkeypatch.setattr(frequency, "SALT_SIZE_THRESHOLD_BYTES", -1)
     assert run() == fused

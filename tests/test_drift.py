@@ -275,3 +275,24 @@ def test_pipeline_benford_family(spark):
     q = [r for r in quiet.collect()
          if r["column_type"] == "benford" and r["column_name"] == "amount"][0]
     assert not q["drift_detected"] and q["drift_score"] == 0.0
+
+
+def test_quantile_mode_exact_gives_percentile_quartiles(spark):
+    """``quantile_mode: "exact"`` is sort-based whatever ``exact_quantiles``
+    says: a drift run's quartiles equal ``percentile``'s, interpolation
+    included, where ``percentile_approx`` would return a data value."""
+    import json
+
+    from pyspark_data_drift_detector_spark.pipeline import detect_drift
+
+    ref = spark.createDataFrame([(float(i),) for i in range(100)], "x double")
+    curr = spark.createDataFrame([(float(i) * 1.5 + 0.3,) for i in range(98)], "x double")
+    (row,) = detect_drift(ref, curr, {"quantile_mode": "exact"}).where(
+        "column_type = 'numerical' AND column_name = 'x'"
+    ).collect()
+    metrics = json.loads(row["metrics"])
+    for pre, side in (("ref", ref), ("curr", curr)):
+        (want,) = side.selectExpr("percentile(x, array(0.25, 0.5, 0.75))").first()
+        got = [metrics[f"{pre}_p25"], metrics[f"{pre}_median"], metrics[f"{pre}_p75"]]
+        assert got == pytest.approx(want, abs=1e-12), pre
+    assert metrics["ref_p25"] == pytest.approx(24.75, abs=1e-12)

@@ -5,11 +5,14 @@ predicate pushdown or adds a shuffle, these fail even though results stay
 correct at test scale.
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from pyspark_data_drift_detector_spark.operators.categorical_drift import categorical_drift
 from pyspark_data_drift_detector_spark.operators.frequency import frequency_table
+from pyspark_data_drift_detector_spark.operators.groups import group_categorical_stats, top_groups
 from pyspark_data_drift_detector_spark.operators.numeric_drift import numeric_drift_pair
 from pyspark_data_drift_detector_spark.operators.profile import numeric_profile
 from pyspark_data_drift_detector_spark.plans.inspect import (
@@ -21,6 +24,8 @@ from pyspark_data_drift_detector_spark.plans.inspect import (
     count_shuffles,
     pushed_filters,
     read_schemas,
+    simple_plan,
+    sorted_windows,
 )
 
 
@@ -95,27 +100,61 @@ def test_pair_profile_single_scan_each_side(li):
     assert count_scans(noq) == 4
 
 
-def test_categorical_drift_bounded_shuffles(li):
-    cd = categorical_drift(
-        li.filter(F.col("l_orderkey") % 2 == 0),
-        li.filter(F.col("l_orderkey") % 2 == 1),
-        ["l_returnflag", "l_linestatus"],
-    )
-    # ONE cells aggregation feeds everything — PERSISTED, because totals,
-    # the pair top-k cutoffs, and the probe all reference it. Shuffle
-    # census: cells agg, totals agg, the salted + global cutoff windows
-    # (shared by both sides), and the final rollup; cutoffs broadcast back.
-    assert count_shuffles(cd) <= 8
-    from pyspark_data_drift_detector_spark.plans.inspect import simple_plan
+@pytest.fixture
+def top_k_callers(li):
+    """The three callers of ``frequency.with_top_k``, as builders over one
+    split, with the keys their per-key windows partition by."""
+    ref = li.filter(F.col("l_orderkey") % 2 == 0)
+    curr = li.filter(F.col("l_orderkey") % 2 == 1)
+    dims = ["l_returnflag", "l_linestatus"]
+    return {
+        "categorical_drift": (lambda: categorical_drift(ref, curr, dims, top_k=2), 1),
+        "group_categorical_stats": (
+            lambda: group_categorical_stats(ref, curr, dims, dims, top_k=2),
+            3,
+        ),
+        "top_groups": (lambda: top_groups(ref, curr, dims, top_k=2), 1),
+    }
 
-    plan = simple_plan(cd)
-    assert "InMemoryTableScan" in plan  # cells materialized once
-    # at test scale the size gate picks the unsalted cutoff shape: no
-    # local-rank (__lrn) stage, windows partition by column_name only —
-    # the salted shape is pinned separately by test_top_k_salt_gate
-    assert "__lrn" not in plan
-    cd.collect()  # AQE: codegen markers appear in the final plan only
-    assert codegen_stage_count(cd) >= 1
+
+def test_top_k_callers_rank_and_total_in_one_window_exchange(top_k_callers):
+    """Below the size gate each caller ranks and totals its cells over ONE
+    per-key window exchange (plus the cells aggregate's own): no cutoff
+    broadcast, no salted stage, nothing cached."""
+    for name, (build, n_keys) in top_k_callers.items():
+        df = build()
+        plan = simple_plan(df)
+        assert count_shuffles(df) == 2, (name, plan)
+        assert "BroadcastExchange" not in plan and "__lrn" not in plan, name
+        assert "InMemoryTableScan" not in plan, name
+        assert {arity for arity, _ in sorted_windows(df)} == {n_keys}, name
+    df = top_k_callers["categorical_drift"][0]()
+    df.collect()  # AQE: codegen markers appear in the final plan only
+    assert codegen_stage_count(df) >= 1
+
+
+def test_top_k_callers_salted_shape_matches(top_k_callers, monkeypatch):
+    """Above the size gate each caller ranks on (key, salt) slices and joins
+    broadcast cutoffs: the only unsalted per-key windows rank the local
+    survivors (``__rn``), none runs over the cells, and no window computes
+    totals. Both shapes return the same rows."""
+    from pyspark_data_drift_detector_spark.functions.lifetime import owned_run
+    from pyspark_data_drift_detector_spark.operators import frequency as freq_mod
+
+    def rows(df):
+        return sorted(
+            tuple(round(v, 12) if isinstance(v, float) else v for v in r) for r in df.collect()
+        )
+
+    small = {name: rows(build()) for name, (build, _) in top_k_callers.items()}
+    monkeypatch.setattr(freq_mod, "SALT_SIZE_THRESHOLD_BYTES", 0)
+    for name, (build, _) in top_k_callers.items():
+        with owned_run():  # keeps the plan lazy, so its shape can be read
+            plan = simple_plan(build())
+        windows = [line for line in plan.splitlines() if "Window [" in line]
+        assert "__lrn" in plan and "BroadcastExchange" in plan, name
+        assert windows and all(re.search(r" AS __l?rn_", w) for w in windows), (name, windows)
+        assert rows(build()) == small[name], name
 
 
 def test_rowpath_score_same_plan_shape(li):
@@ -394,18 +433,16 @@ def test_ensure_min_partitions_refuses_binary(docs):
     assert fanned.rdd.getNumPartitions() == 8
 
 
-def test_top_k_salt_gate(li):
-    """salt_partitions=None gates on Catalyst's size estimate: small frames
-    take a single per-key window; forcing the salted shape adds the local
-    __lrn rank stage with (key, salt) partitions — and both shapes return
-    identical cutoffs."""
+def test_top_k_salt_gate(li, monkeypatch):
+    """``with_top_k`` gates on Catalyst's size estimate: small frames take a
+    single per-key window; past ``SALT_SIZE_THRESHOLD_BYTES`` the local
+    __lrn rank stage with (key, salt) partitions appears — and both shapes
+    return identical members and totals."""
+    from pyspark_data_drift_detector_spark.functions.lifetime import owned_run
+    from pyspark_data_drift_detector_spark.operators import frequency as freq_mod
     from pyspark_data_drift_detector_spark.operators.frequency import (
         pair_frequency_cells,
-        pair_top_k_cutoffs,
-    )
-    from pyspark_data_drift_detector_spark.plans.inspect import (
-        simple_plan,
-        sorted_windows,
+        with_top_k,
     )
 
     cells = pair_frequency_cells(
@@ -413,14 +450,21 @@ def test_top_k_salt_gate(li):
         li.filter(F.col("l_orderkey") % 2 == 1),
         ["l_returnflag", "l_linestatus"],
     ).filter(F.col("value").isNotNull())
-    auto = pair_top_k_cutoffs(cells, 3)
-    assert "__lrn" not in simple_plan(auto)  # tiny estimate → unsalted
-    forced = pair_top_k_cutoffs(cells, 3, salt_partitions=32)
-    fplan = simple_plan(forced)
-    assert "__lrn" in fplan
-    assert any(a >= 2 for a, _ in sorted_windows(forced))
+
+    def build():
+        return with_top_k(
+            cells, 3, count_cols=("ref_cnt", "curr_cnt"), sums={"n": F.sum("ref_cnt")}
+        )
+
     rows = lambda df: sorted(tuple(r) for r in df.collect())
-    assert rows(auto) == rows(forced)
+    auto = build()
+    assert "__lrn" not in simple_plan(auto)  # tiny estimate → unsalted
+    monkeypatch.setattr(freq_mod, "SALT_SIZE_THRESHOLD_BYTES", 0)
+    with owned_run():
+        forced = build()
+        assert "__lrn" in simple_plan(forced)
+        assert any(a >= 2 for a, _ in sorted_windows(forced))
+        assert rows(auto) == rows(forced)
 
 
 def test_mergeable_state_plan_shapes(li, docs):

@@ -9,12 +9,15 @@ import datetime
 import json
 import pathlib
 import re
+import threading
 import time
 
 import pytest
 from pyspark.sql import functions as F
 
 from pyspark_data_drift_detector_spark.functions.lifetime import collect_local
+from pyspark_data_drift_detector_spark.operators import frequency
+from pyspark_data_drift_detector_spark.operators.categorical_drift import categorical_drift
 from pyspark_data_drift_detector_spark.operators.dedup import (
     dedup_survivors,
     minhash_lsh_pairs,
@@ -103,6 +106,53 @@ def test_jobs_run_in_the_callers_group_and_nothing_stays_cached(spark, pair, tmp
     # a difference, not an equality: the status store evicts old jobs
     assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
     assert not _cached_rdds(spark) - cached
+
+
+@pytest.mark.parametrize("salted", [False, True], ids=["window", "salted"])
+def test_standalone_drift_calls_leave_nothing_persisted(spark, pair, monkeypatch, salted):
+    """Called outside any run, ``categorical_drift`` and ``group_drift``
+    leave no persisted RDD, in either shape of the top-k builder."""
+    if salted:
+        monkeypatch.setattr(frequency, "SALT_SIZE_THRESHOLD_BYTES", -1)
+    ref, curr = pair
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    assert categorical_drift(ref, curr, ["mode", "flag"]).collect()
+    assert persistent().size() == before
+    assert group_drift(ref, curr, ["mode", "flag"], ["qty"], ["mode"]).collect()
+    assert persistent().size() == before
+
+
+def test_cancelling_the_callers_group_stops_a_drift_run(spark, pair):
+    """Cancelling the caller's job group while ``detect_drift`` runs makes
+    the call raise promptly, and its run still releases what it kept."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    persistent = sc._jsc.getPersistentRDDs
+    before = persistent().size()
+    ref, curr = pair
+    raised: list[BaseException] = []
+
+    def call():
+        sc.setJobGroup("drift-cancel", "cancelled by the caller")
+        try:
+            detect_drift(ref, curr, {"profile": "standard"}).collect()
+        except Exception as e:  # noqa: BLE001 - the cancellation is the expected outcome
+            raised.append(e)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    caller = threading.Thread(target=call)
+    caller.start()
+    deadline = time.monotonic() + 120
+    while not tracker.getJobIdsForGroup("drift-cancel") and caller.is_alive():
+        assert time.monotonic() < deadline, "no job of the caller's group started"
+        time.sleep(0.05)
+    sc.cancelJobGroup("drift-cancel")
+    caller.join(timeout=30)
+    assert not caller.is_alive(), "the cancelled call did not return within 30 s"
+    assert raised and "cancel" in str(raised[0]).lower(), raised
+    assert persistent().size() == before
 
 
 def test_a_builders_query_keeps_its_session_confs_when_another_ends(spark, tmp_path):

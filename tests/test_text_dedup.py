@@ -259,6 +259,18 @@ def _lsh_parity_docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def test_null_text_has_no_shingles(spark):
+    """NULL text has no shingles, so a NULL-text document pairs with
+    nothing; blank text keeps its one empty shingle, so blank documents
+    pair with each other (the DuckDB oracle's ``unnest`` semantics)."""
+    docs = spark.createDataFrame(
+        [(1, None), (2, None), (3, ""), (4, "   "), (5, "a b c d"), (6, None)],
+        "doc_id long, text string",
+    )
+    for pairs in (jaccard_pairs(docs, threshold=0.5), minhash_lsh_pairs(docs, threshold=0.5)):
+        assert {(r["id1"], r["id2"]): r["jaccard"] for r in pairs.collect()} == {(3, 4): 1.0}
+
+
 @pytest.mark.parametrize("hash_family", ["xxhash", "md5"])
 @pytest.mark.parametrize("max_bucket_size", [None, 5])
 def test_minhash_lsh_verify_matches_exact_jaccard_on_candidates(spark, hash_family, max_bucket_size):

@@ -13,6 +13,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from pyspark_data_drift_detector_spark.functions.lifetime import owned_run
 from pyspark_data_drift_detector_spark.operators import frequency
 from pyspark_data_drift_detector_spark.operators.categorical_drift import (
     categorical_drift_from_cells,
@@ -234,8 +235,9 @@ def test_categorical_window_membership_matches_cutoff_path(spark, monkeypatch):
     def run(salted: bool):
         # pin the size gate: a local frame's estimate is not its size
         monkeypatch.setattr(frequency, "_should_salt", lambda df: salted)
-        df = categorical_drift_from_cells(cells, top_k=2)
-        return simple_plan(df), {r["column_name"]: r.asDict() for r in df.collect()}
+        with owned_run():  # keeps the salted result lazy, so its plan can be read
+            df = categorical_drift_from_cells(cells, top_k=2)
+            return simple_plan(df), {r["column_name"]: r.asDict() for r in df.collect()}
 
     small_plan, small = run(False)
     salted_plan, salted = run(True)
