@@ -375,7 +375,7 @@ def q_quantile_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
         curr,
         ["l_extendedprice", "l_quantity", "l_discount"],
         quantiles=(0.25, 0.5, 0.75, 0.95),
-        exact_quantiles=True,
+        quantile_mode="exact",
     )
     return _round_cols(
         shifts.select("column_name", "quantile", "ref_value", "curr_value", "abs_diff", "rel_diff"),

@@ -108,20 +108,15 @@ _DEFAULTS: dict[str, Any] = {
     "categorical_top_k": 20,
     "group_top_k": 20,
     "group_value_top_k": 10,
-    # Quantile strategy: approx (percentile_approx, single-pass sketch) is
-    # the default — the reference's own choice in its row-path
-    # (numerical_analyzer.py:306-307) and the only shape that survives
-    # 100 TB (exact percentile merges a full value→count map in one final
-    # task). Exact interpolated quantiles (= DuckDB quantile_cont) remain a
-    # knob; the oracle-checked standalone queries pass exact explicitly.
-    "exact_quantiles": False,
+    # Quantile engine: "approx" (percentile_approx at quantile_accuracy, a
+    # single-pass sketch) is the default — the reference's own choice in
+    # its row-path (numerical_analyzer.py:306-307) and bounded state at any
+    # scale. Exact interpolated quantiles (= DuckDB quantile_cont) come from
+    # "exact" (a sort-based gather, one column's values in one task) or
+    # "counts" (value histograms + distributed prefix sums, O(distinct)
+    # state); the oracle-checked standalone queries pass exact explicitly.
     "quantile_accuracy": 10000,
-    # "counts" switches exact quantiles to the value-histogram path
-    # (profile.quantiles_by_counts) — bounded state at any scale
-    "quantile_mode": "auto",
-    # KLL sketch accuracy/state knob (Datasketches K) for quantile_mode
-    # "kll" — tune rank error vs sketch size without editing the library
-    "kll_k": 800,
+    "quantile_mode": "approx",
     # Numeric drift scorer: "weighted" (dict-path, numerical_analyzer.py:253-272)
     # or "row_path" (M17 mean-of-components, numerical_analyzer.py:278-558).
     # Both reference scorers are preserved; default matches the reference's
@@ -159,7 +154,18 @@ class DriftConfig:
 
     def __post_init__(self) -> None:
         merged = copy.deepcopy(_DEFAULTS)
-        merged.update(self.raw or {})
+        raw = dict(self.raw or {})
+        # configs saved before quantile_mode became the only quantile
+        # setting carry "auto" (exact_quantiles then chose) and kll_k
+        exact = bool(raw.pop("exact_quantiles", False))
+        raw.pop("kll_k", None)
+        if raw.get("quantile_mode", "auto") == "auto":
+            raw["quantile_mode"] = "exact" if exact else "approx"
+        if raw["quantile_mode"] not in ("approx", "exact", "counts"):
+            raise ValueError(
+                f"unknown quantile_mode {raw['quantile_mode']!r}; expected 'approx', 'exact' or 'counts'"
+            )
+        merged.update(raw)
         profile = merged.get("profile", "standard")
         if profile not in THRESHOLD_PROFILES:
             raise ValueError(f"unknown profile {profile!r}; expected one of {sorted(THRESHOLD_PROFILES)}")

@@ -1,7 +1,7 @@
 """Identifier/literal quoting for SQL-string plan assembly.
 
-The operator modules assemble expressions as SQL text (see
-``profile._quantile_agg_sql`` — py4j round-trips made Column-API
+The operator modules assemble expressions as SQL text (see the
+``operators.profile`` module docstring — py4j round-trips made Column-API
 construction the dominant driver cost). Interpolating a raw column name
 into that text is only safe when the name cannot terminate the quoting
 context; a name containing a backtick or single quote (legal in Spark

@@ -209,7 +209,7 @@ def categorical_drift_from_cells(
 
     # a NULL value is never ranked: it enters the ranks with count 0, which
     # is never a member and ranks after every positive count. Derived
-    # expressions are SQL strings — see profile._quantile_agg_sql for why
+    # expressions are SQL strings — see the profile module docstring for why
     # (py4j round-trips dominated driver-side plan construction)
     sides = ("ref", "curr")
     nn = with_top_k(

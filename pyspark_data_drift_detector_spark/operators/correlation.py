@@ -41,7 +41,7 @@ def correlation_pairs(
     )
     # SQL-string assembly: O(pairs) corr aggregates cross the py4j bridge in
     # ONE selectExpr call instead of ~10 round-trips per expression (see
-    # profile._quantile_agg_sql for the measurement)
+    # the profile module docstring for the measurement)
     aggs = []
     for i, (a, b) in enumerate(pairs):
         for pre, tag in (("ref", "'r'"), ("curr", "'c'")):

@@ -295,7 +295,7 @@ def _signature_aggs(index: DataFrame, num_hashes: int, hash_family: str) -> tupl
     """The shingle index with its per-shingle hash ``h``, and the
     ``num_hashes`` MinHash aggregates over it (see ``minhash_signatures``)."""
     # SQL-string assembly for the num_hashes aggregate list — see
-    # profile._quantile_agg_sql for why
+    # the profile module docstring for why
     if hash_family == "md5":
         index = index.withColumn("h", md5_hash60(F.col("shingle")) % MERSENNE31)
         aggs = [
@@ -749,7 +749,7 @@ def simhash(
     else:
         toks = toks.withColumn("h", F.xxhash64(F.col("token")))
     # branch-free ±1 vote: (bit<<1) − 1 — keeps the 64-aggregate codegen
-    # small. SQL-string assembly — see profile._quantile_agg_sql for why.
+    # small. SQL-string assembly — see the profile module docstring for why.
     votes = [
         f"sum((shiftright(h, {i}) & 1) * 2 - 1) AS v{i}" for i in range(bits)
     ]

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pyspark_data_drift_detector_spark.functions.lifetime import collect_local, keep, owned_run
+from pyspark_data_drift_detector_spark.functions.lifetime import keep, owned_result
 from pyspark_data_drift_detector_spark.operators.frequency import pair_frequency_cells
 from pyspark_data_drift_detector_spark.operators.profile import numeric_profile_pair
 
@@ -30,13 +30,14 @@ def quantile_shift(
     df_curr: DataFrame,
     columns: list[str],
     quantiles: tuple[float, ...] = QUANTILES,
-    exact_quantiles: bool = False,
+    quantile_mode: str = "approx",
     quantile_accuracy: int = 100,
 ) -> DataFrame:
     """Per-(column, quantile) abs/rel shifts — long format.
 
     Default approx quantiles with accuracy=100 ≈ the reference's
-    ``approxQuantile(..., 0.01)`` relative error. Rel-diff convention
+    ``approxQuantile(..., 0.01)`` relative error; ``quantile_mode`` picks
+    the engine as in ``profile.numeric_profile``. Rel-diff convention
     (``distribution_analyzer.py:112-121``): ref==0 → |c-r|/max(|c|,1e-10)
     if c != 0 else 0; always absolute.
     """
@@ -45,7 +46,7 @@ def quantile_shift(
         df_curr,
         columns=columns,
         quantiles=quantiles,
-        exact_quantiles=exact_quantiles,
+        quantile_mode=quantile_mode,
         quantile_accuracy=quantile_accuracy,
     )
     return quantile_shift_from_pair(pair, quantiles)
@@ -60,7 +61,7 @@ def quantile_shift_from_pair(
     both snapshots."""
     from pyspark_data_drift_detector_spark.operators.profile import _qname
 
-    # SQL-string assembly — see profile._quantile_agg_sql for why
+    # SQL-string assembly — see the profile module docstring for why
     rows = []
     for p in quantiles:
         r, c = f"ref_{_qname(p)}", f"curr_{_qname(p)}"
@@ -311,7 +312,6 @@ def _psi_wide(
     df_curr: DataFrame,
     columns: list[str],
     bins: int,
-    exact_quantiles: bool,
     quantile_mode: str,
 ) -> tuple[DataFrame, dict]:
     """Shared front of the numeric-PSI family: reference-quantile bin
@@ -327,7 +327,6 @@ def _psi_wide(
         columns,
         quantiles=tuple(probs),
         with_shape=False,
-        exact_quantiles=exact_quantiles,
         quantile_mode=quantile_mode,
     )
     edge_rows = {r["column_name"]: r for r in prof.collect()}
@@ -353,7 +352,7 @@ def _psi_wide(
     tagged = df_ref.select(F.lit("r").alias("__side"), *columns).unionByName(
         df_curr.select(F.lit("c").alias("__side"), *columns)
     )
-    # SQL-string assembly — see profile._quantile_agg_sql for why (12.9k
+    # SQL-string assembly — see the profile module docstring (12.9k
     # bridge calls ≈ 5.6s of driver time for 4 columns before)
     aggs: list[str] = []
     for c, es in edges.items():
@@ -378,8 +377,7 @@ def psi_numeric_cells(
     columns: list[str],
     bins: int = 10,
     epsilon: float = 1e-4,
-    exact_quantiles: bool = True,
-    quantile_mode: str = "auto",
+    quantile_mode: str = "exact",
 ) -> DataFrame:
     """Per-bin drill-down of :func:`psi_numeric` — WHICH quantile band
     drives a hot PSI, the numeric twin of
@@ -390,9 +388,7 @@ def psi_numeric_cells(
     jobs as ``psi_numeric`` (edge collect + one side-tagged wide
     aggregate); only the melt differs.
     """
-    wide, edges = _psi_wide(
-        df_ref, df_curr, columns, bins, exact_quantiles, quantile_mode
-    )
+    wide, edges = _psi_wide(df_ref, df_curr, columns, bins, quantile_mode)
     if not edges:  # every requested column all-NULL on ref — no PSI definable
         return df_ref.sparkSession.createDataFrame(
             [],
@@ -427,8 +423,7 @@ def psi_numeric(
     columns: list[str],
     bins: int = 10,
     epsilon: float = 1e-4,
-    exact_quantiles: bool = True,
-    quantile_mode: str = "auto",
+    quantile_mode: str = "exact",
 ) -> DataFrame:
     """PSI for numeric columns over reference-quantile bins.
 
@@ -441,9 +436,7 @@ def psi_numeric(
     all bin counts of all columns. Bin membership is ``Σ (v > edge)`` —
     identical arithmetic in the SQL oracle.
     """
-    wide, edges = _psi_wide(
-        df_ref, df_curr, columns, bins, exact_quantiles, quantile_mode
-    )
+    wide, edges = _psi_wide(df_ref, df_curr, columns, bins, quantile_mode)
     if not edges:  # every requested column all-NULL on ref — no PSI definable
         return df_ref.sparkSession.createDataFrame(
             [], "column_name string, psi double, stability string"
@@ -523,13 +516,12 @@ def histogram(
     )
 
 
+@owned_result
 def equidepth_histogram(
     df: DataFrame,
     columns: list[str],
     bins: int = 10,
     quantile_mode: str = "exact",
-    kll_k: int = 800,
-    materialize: bool = True,
 ) -> DataFrame:
     """Equi-depth (equal-frequency) histogram for all columns in one
     logical plan: bin edges are the exact ``i/bins`` percentiles, so each
@@ -550,33 +542,22 @@ def equidepth_histogram(
     single-task sort of a column. Output: ``column_name, bin, lo, hi,
     cnt`` with ``lo/hi`` the bin's percentile edges.
 
-    ``quantile_mode`` selects the edge-pass engine (the
-    ``numeric_profile(quantile_mode=)`` knob): ``"exact"`` (default, the
-    oracle contract — sort-based ``percentile`` buffers each column in
-    its aggregation buffer), ``"counts"`` (exact edges from the value
+    ``quantile_mode`` selects the edge-pass engine
+    (``profile._quantile_row``): ``"exact"`` (default, the oracle
+    contract — the NumPy gather), ``"counts"`` (exact edges from the value
     histogram, state bounded by distinct values — the 100 TB path), or
-    ``"kll"`` (mergeable sketch, bounded rank error; ``kll_k`` tunes its
-    accuracy/state tradeoff, default 800). The binning pass is identical
-    in every mode.
+    ``"approx"`` (``percentile_approx`` edges, bounded rank error). The
+    binning pass is identical in every mode.
 
     In counts mode the value-histogram cells are kept (reused for edges
-    AND bin counts); ``materialize=True`` (default) returns the
-    O(columns × bins)-row result as a local relation from one owned run
-    that releases the caches; ``materialize=False`` returns the plan
-    lazily and leaves cache lifetime to the caller (the plan-inspection
-    knob, matching ``key_skew_profile``/``zipf_fit``).
+    AND bin counts) for the enclosing owned run; a call outside one gets
+    its O(columns × bins)-row result as a local relation and leaves
+    nothing cached.
     """
-    if quantile_mode == "counts" and materialize:
-        with owned_run():
-            return collect_local(
-                [equidepth_histogram(df, columns, bins, quantile_mode, kll_k, materialize=False)]
-            )[0]
     from pyspark_data_drift_detector_spark.functions.quoting import (
         ensure_safe_columns,
     )
-    from pyspark_data_drift_detector_spark.operators.profile import (
-        _wide_quantile_row,
-    )
+    from pyspark_data_drift_detector_spark.operators.profile import _quantile_row
 
     if bins < 2:
         raise ValueError(f"bins must be >= 2, got {bins}")
@@ -619,13 +600,8 @@ def equidepth_histogram(
                 "cnt",
             )
         )
-    edges = _wide_quantile_row(
-        df,
-        columns,
-        probs,
-        quantile_mode,
-        kll_k=kll_k,
-        prefix="__e",
+    edges = _quantile_row(
+        df, [(f"__e{i}", c, None, None) for i, c in enumerate(columns)], probs, quantile_mode
     )
     # bin assignment unrolled to (bins-1) scalar comparisons against the
     # broadcast edge array's elements: the same monotone count of

@@ -194,7 +194,7 @@ def _salted_cutoffs(
     (a ``cnt, val`` struct; the last cell when the key has fewer than k),
     ranked with bounded per-task state. All count columns share the salted
     and the per-key exchange (two sorts each, one shuffle each)."""
-    # SQL-string assembly — see profile._quantile_agg_sql for why
+    # SQL-string assembly — see the profile module docstring for why
     keylist = ", ".join(f"`{x}`" for x in keys)
     v = f"`{value_col}`"
     salt = f"pmod(xxhash64({v}), 32)"
@@ -272,7 +272,7 @@ def pair_frequency_cells(
     tagged = df_ref.select(F.lit("r").alias("__side"), *columns).unionByName(
         df_curr.select(F.lit("c").alias("__side"), *columns)
     )
-    # SQL-string melt — one bridge call (see profile._quantile_agg_sql)
+    # SQL-string melt — one bridge call (see the profile module docstring)
     structs = ", ".join(
         f"named_struct('column_name', '{c}', 'value', CAST(`{c}` AS STRING))"
         for c in columns

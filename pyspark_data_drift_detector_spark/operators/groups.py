@@ -179,7 +179,7 @@ def group_numeric_stats(
         df_ref, df_curr, _as_dims(dimension), columns, None, keep_groups=keep_groups
     )
 
-    # SQL-string assembly — see profile._quantile_agg_sql for why (py4j
+    # SQL-string assembly — see the profile module docstring for why (py4j
     # round-trips dominated driver-side plan construction)
     sides = {"ref": "__side = 'r'", "curr": "__side = 'c'"}
     aggs: list[str] = []

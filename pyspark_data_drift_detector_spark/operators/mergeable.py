@@ -14,8 +14,7 @@ exact algebra (the same partial-aggregate shapes Spark's own
 additive where Welford's M2 would need pairwise combination). Mean and
 sample stddev are derived AFTER merging. Quantiles are deliberately not
 carried — exact quantiles are not finitely mergeable; use the KLL sketch
-mode (``profile.numeric_profile(quantile_mode="kll")``) when mergeable
-quantiles are required.
+state (``partitioned_quantiles``) when mergeable quantiles are required.
 
 ``incremental_profile`` = ``partitioned_profile`` → filter to a window →
 ``merge_profiles``: the batch-incremental pattern a daily pipeline runs.

@@ -222,7 +222,7 @@ def numeric_drift_from_joined(
     th = dict(DEFAULT_NUM_THRESHOLDS)
     th.update(thresholds or {})
 
-    # SQL-string assembly — see profile._quantile_agg_sql for why (py4j
+    # SQL-string assembly — see the profile module docstring for why (py4j
     # round-trips dominated driver-side plan construction)
     derived = []
     for side in ("ref", "curr"):

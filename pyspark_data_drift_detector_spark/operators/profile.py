@@ -12,6 +12,19 @@ array of structs — O(columns) rows) into the long profile table that all
 drift operators join on. At 100 TB this is one full scan, no matter how many
 columns or statistics are requested.
 
+SQL-string assembly (here and throughout the operator modules): a
+profile aggregate is O(columns × stats) expressions, and building each via
+the Column API costs several synchronous py4j round-trips — measured
+13,600 bridge calls ≈ 1.8 s of DRIVER time for an 8-column pair profile,
+pure plan construction. One ``selectExpr`` ships the whole expression list
+across the bridge in a single call and parses it JVM-side into the
+identical Catalyst expressions.
+
+Quantiles have two contracts and three engines, chosen by ``quantile_mode``
+in :func:`_quantile_row` alone: ``"approx"`` (``percentile_approx``), and
+the exact interpolated quantiles of DuckDB's ``quantile_cont`` from either
+``"exact"`` (a NumPy gather) or ``"counts"`` (value histograms).
+
 Covers SURVEY.md §2.4 A1-A5, A7, §2.2 P2.
 """
 
@@ -21,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pyspark_data_drift_detector_spark.functions.lifetime import collect_local, keep, owned_run
+from pyspark_data_drift_detector_spark.functions.lifetime import keep, owned_result
 
 DEFAULT_QUANTILES: tuple[float, ...] = (0.01, 0.05, 0.1, 0.25, 0.5, 0.75, 0.9, 0.95, 0.99)
 
@@ -64,7 +77,7 @@ def quantiles_by_counts(
     two-phase prefix sum** (``bucketed_cumsum``: equi-depth buckets +
     broadcast offsets + within-bucket windows) → tiny per-column
     aggregate. Shuffle volume is O(distinct values), and no single task
-    ever materializes a column's full value list — parallelism is
+    ever holds a column's full value list — parallelism is
     columns × buckets, not columns.
 
     Honest measurement: at sf0.1 on local[32] this is ~5% SLOWER than the
@@ -269,44 +282,6 @@ def _quantiles_from_cells(
     return percol.select("column_name", *outs)
 
 
-def _quantile_agg_sql(
-    dc: str,
-    qlist: list[float],
-    quantile_mode: str,
-    exact_quantiles: bool,
-    quantile_accuracy: int,
-    kll_k: int = 800,
-) -> str:
-    """The quantile aggregate (as a SQL fragment) for one column under the
-    selected mode.
-
-    ``"kll"`` uses Spark 4.1's Datasketches KllDoublesSketch
-    (``kll_sketch_agg_double`` → ``kll_sketch_get_quantile_double``): a
-    mergeable, provably-bounded-rank-error sketch whose per-partition state
-    is O(k log n) — the preferred approximate path for a 1000-executor
-    aggregation (sketches merge associatively on the reducer; no value
-    list ever materializes). Returned quantiles are stream values (no
-    interpolation), so it is an approximate mode, not an oracle mode.
-    ``kll_k`` is the sketch's accuracy/state knob (Datasketches K):
-    the default 800 ≈ 0.4% rank error at 99% confidence; a 100×-scale
-    user tightens or loosens it without editing the library.
-
-    SQL-string assembly (here and throughout this module): the profile
-    aggregate is O(columns × stats) expressions, and building each via the
-    Column API costs several synchronous py4j round-trips — measured
-    13,600 bridge calls ≈ 1.8 s of DRIVER time for an 8-column pair
-    profile, pure plan construction. One ``selectExpr`` ships the whole
-    expression list across the bridge in a single call and parses it
-    JVM-side into the identical Catalyst expressions.
-    """
-    probs = "array(" + ",".join(repr(float(p)) for p in qlist) + ")"
-    if quantile_mode == "kll":
-        return f"kll_sketch_get_quantile_double(kll_sketch_agg_double({dc}, {int(kll_k)}), {probs})"
-    if exact_quantiles:
-        return f"percentile({dc}, {probs})"
-    return f"percentile_approx({dc}, {probs}, {int(quantile_accuracy)})"
-
-
 def _percentile_from_sorted(v, n: int, p: float) -> float:
     """Replicate Spark ``Percentile.getPercentile`` over a sorted vector:
     ``pos = p·(n−1)``, order statistics at ranks ``⌊pos⌋``/``⌈pos⌉``
@@ -335,8 +310,7 @@ def _sorted_quantile_row(
     side_col: str | None = None,
 ) -> DataFrame:
     """ONE-row frame of exact quantile arrays via a single NumPy sort per
-    spec — the exact-mode engine behind ``numeric_profile`` /
-    ``numeric_profile_pair`` / ``_wide_quantile_row``.
+    spec — the ``"exact"`` engine of :func:`_quantile_row`.
 
     ``F.percentile`` (sort-based exact) is a TypedImperativeAggregate
     whose buffer is a boxed per-value ``OpenHashMap``; for a
@@ -357,8 +331,8 @@ def _sorted_quantile_row(
     buffered them as a boxed map (~48 B/entry) where this gather holds a
     packed float64 vector (8 B/value), so the memory wall moves OUT by
     ~6x but remains; at 100 TB use ``quantile_mode="counts"``
-    (O(distinct) distributed state) or ``"kll"`` (mergeable sketches) —
-    the documented scale paths, both unchanged. Unlike ``percentile``'s
+    (O(distinct) distributed state) or ``"approx"`` (bounded sketches) —
+    the documented scale paths. Unlike ``percentile``'s
     map-side partials, the gather ships raw rows; at bench scale the
     shuffle is MB-sized and the sort dominates, which is exactly the
     regime this engine targets.
@@ -417,10 +391,62 @@ def _sorted_quantile_row(
     return proj.groupBy().applyInPandas(fn, schema)
 
 
+def _quantile_row(
+    df: DataFrame,
+    specs: list[tuple],
+    qlist: list[float],
+    mode: str,
+    side_col: str | None = None,
+    accuracy: int = 10000,
+) -> DataFrame:
+    """ONE-row frame with one ``array<double>`` of the ``qlist`` quantiles
+    per spec ``(out_name, src_col, side_value, mad_name)``, from the engine
+    ``mode`` names — the only place a mode maps to an engine:
+
+    * ``"approx"`` — ``percentile_approx`` at ``accuracy`` in one ungrouped
+      aggregate: the reference's engine (``numerical_analyzer.py:306-307``)
+      and bounded sketch state at any scale;
+    * ``"exact"`` — :func:`_sorted_quantile_row`, the NumPy gather: values
+      of ``percentile`` and DuckDB ``quantile_cont``, the fast exact path;
+    * ``"counts"`` — :func:`quantiles_by_counts`: the same exact values
+      from value histograms, O(distinct) distributed state.
+
+    ``side_value`` (with ``side_col``) restricts a spec to one side of a
+    tagged union. ``mad_name`` asks for the gather's fused median absolute
+    deviation, so only exact mode reads it. The exact engine returns zero
+    rows on zero input rows; attach the row with
+    :func:`_attach_quantile_row`.
+    """
+    if mode == "exact":
+        return _sorted_quantile_row(df, specs, qlist, side_col)
+    if mode == "approx":
+        probs = "array(" + ",".join(repr(float(p)) for p in qlist) + ")"
+        aggs = []
+        for out, c, sv, _ in specs:
+            x = f"CAST(`{c}` AS DOUBLE)"
+            if sv is not None:
+                x = f"CASE WHEN {side_col} = '{sv}' THEN {x} END"
+            aggs.append(f"percentile_approx({x}, {probs}, {int(accuracy)}) AS `{out}`")
+        return df.selectExpr(*aggs)
+    if mode == "counts":
+        pre = {sv: "" if sv is None else f"{sv}_" for _, _, sv, _ in specs}
+        sides = {pre[sv]: F.lit(True) if sv is None else F.col(side_col) == sv for sv in pre}
+        rows = quantiles_by_counts(df, sorted({c for _, c, _, _ in specs}), qlist, sides)
+        return rows.groupBy().agg(
+            *[
+                F.max(F.when(F.col("column_name") == c, F.col(f"{pre[sv]}q"))).alias(out)
+                for out, c, sv, _ in specs
+            ]
+        )
+    raise ValueError(
+        f"unknown quantile_mode {mode!r}; expected 'approx', 'exact' or 'counts'"
+    )
+
+
 def _attach_quantile_row(wide: DataFrame, qrow: DataFrame) -> DataFrame:
-    """Attach the 1-row gather to the 1-row stats aggregate. A plain
-    crossJoin would turn ``qrow``'s zero-rows-on-empty-input into an
-    empty profile; the broadcast LEFT join keeps the stats row and NULLs
+    """Attach the 1-row quantile frame to the 1-row stats aggregate. A
+    plain crossJoin would turn the gather's zero-rows-on-empty-input into
+    an empty profile; the broadcast LEFT join keeps the stats row and NULLs
     the quantile arrays — exactly ``percentile``'s empty-input shape."""
     return (
         wide.withColumn("__qk", F.lit(1))
@@ -429,25 +455,22 @@ def _attach_quantile_row(wide: DataFrame, qrow: DataFrame) -> DataFrame:
     )
 
 
+@owned_result
 def numeric_profile(
     df: DataFrame,
     columns: list[str] | None = None,
     quantiles: tuple[float, ...] = DEFAULT_QUANTILES,
-    exact_quantiles: bool = True,
     quantile_accuracy: int = 10000,
     with_shape: bool = True,
-    quantile_mode: str = "auto",
-    kll_k: int = 800,
+    quantile_mode: str = "exact",
 ) -> DataFrame:
     """Long-format numeric profile: one row per column, one Spark job total.
 
-    ``quantile_mode``: ``"auto"`` (sort-based exact when ``exact_quantiles``
-    else approx sketch), ``"exact"`` (sort-based exact whatever
-    ``exact_quantiles`` says), ``"counts"`` — exact via the value-histogram
-    reconstruction (``quantiles_by_counts``), the preferred exact path at
-    scale for bounded-cardinality columns — or ``"kll"``, the mergeable
-    Datasketches KLL sketch (see ``_quantile_agg_expr``), the preferred
-    approximate path at extreme scale.
+    ``quantile_mode`` picks the quantile engine (:func:`_quantile_row`):
+    ``"exact"`` (default — matches the DuckDB oracle's ``quantile_cont``),
+    ``"counts"`` (the same values with O(distinct) state, the exact path at
+    scale) or ``"approx"`` (``percentile_approx`` at ``quantile_accuracy``,
+    the reference's choice at ``numerical_analyzer.py:306-307``).
 
     Output schema::
 
@@ -455,11 +478,6 @@ def numeric_profile(
         null_ratio double, min double, max double, mean double,
         stddev double, [skewness double, kurtosis double,]
         p1 .. p99 double  (per requested quantile)
-
-    ``exact_quantiles=True`` uses ``F.percentile`` (sort-based exact — matches
-    the DuckDB oracle's ``quantile_cont``); at 100 TB switch to
-    ``exact_quantiles=False`` → ``percentile_approx`` (single-pass
-    KLL-style sketch, reference's choice at ``numerical_analyzer.py:306-307``).
 
     Reference semantics: scalar stats ``numerical_analyzer.py:131-192``;
     null counts folded into conditional aggregates instead of separate
@@ -474,7 +492,6 @@ def numeric_profile(
 
     qlist = list(quantiles)
     aggs: list[str] = ["count(1) AS `__n_rows`"]
-    qaggs: list[str] = []
     for c in cols:
         dc = f"CAST(`{c}` AS DOUBLE)"
         aggs += [
@@ -490,32 +507,22 @@ def numeric_profile(
                 f"skewness({dc}) AS `{c}__skewness`",
                 f"kurtosis({dc}) AS `{c}__kurtosis`",
             ]
-        if qlist and quantile_mode != "counts":
-            qsql = _quantile_agg_sql(
-                dc, qlist, quantile_mode, exact_quantiles,
-                quantile_accuracy, kll_k,
-            )
-            qaggs.append(f"{qsql} AS `{c}__q`")
 
     # Quantiles live in their OWN subtree (one plan, independent stages
-    # the scheduler overlaps): percentile_approx/kll are
-    # TypedImperativeAggregates, and ONE of them in an Aggregate node
+    # the scheduler overlaps): percentile_approx is a
+    # TypedImperativeAggregate, and ONE of them in an Aggregate node
     # forces the whole node onto the interpreted ObjectHashAggregate path
     # — dragging the ~100 simple stats out of whole-stage codegen
     # (measured 3.2s → 2.5s exact, 1.9s → 1.4s approx for the pair
-    # profile at sf0.1). Exact mode uses the NumPy gather engine
-    # (_sorted_quantile_row — measured 3.7-4.3s → 1.1-2.0s for this
-    # profile at sf0.1, identical values).
+    # profile at sf0.1).
     wide = df.selectExpr(*aggs)
-    if qlist and (quantile_mode == "exact" or (quantile_mode == "auto" and exact_quantiles)):
-        qrow = _sorted_quantile_row(
-            df, [(f"{c}__q", c, None, None) for c in cols], qlist
+    if qlist:
+        qrow = _quantile_row(
+            df, [(f"{c}__q", c, None, None) for c in cols], qlist,
+            quantile_mode, accuracy=quantile_accuracy,
         )
         wide = _attach_quantile_row(wide, qrow)
-    elif qaggs:
-        wide = wide.crossJoin(df.selectExpr(*qaggs))
 
-    counts_mode = bool(qlist) and quantile_mode == "counts"
     shape_fields = ["skewness", "kurtosis"] if with_shape else []
     structs = []
     for c in cols:
@@ -531,46 +538,33 @@ def numeric_profile(
             f"'stddev', `{c}__stddev`",
         ]
         fields += [f"'{s}', `{c}__{s}`" for s in shape_fields]
-        if not counts_mode:
-            fields += [
-                f"'{_qname(p)}', `{c}__q`[{i}]" for i, p in enumerate(qlist)
-            ]
+        fields += [f"'{_qname(p)}', `{c}__q`[{i}]" for i, p in enumerate(qlist)]
         structs.append("named_struct(" + ", ".join(fields) + ")")
 
-    long = wide.selectExpr("inline(array(" + ", ".join(structs) + "))")
-    if counts_mode:
-        qtable = quantiles_by_counts(df, cols, qlist)
-        long = long.join(F.broadcast(qtable), "column_name", "left").select(
-            *long.columns, *[F.col("q")[i].alias(_qname(p)) for i, p in enumerate(qlist)]
-        )
-    return long
+    return wide.selectExpr("inline(array(" + ", ".join(structs) + "))")
 
 
+@owned_result
 def numeric_profile_pair(
     df_ref: DataFrame,
     df_curr: DataFrame,
     columns: list[str] | None = None,
     quantiles: tuple[float, ...] = DEFAULT_QUANTILES,
-    exact_quantiles: bool = True,
     quantile_accuracy: int = 10000,
     with_shape: bool = False,
-    quantile_mode: str = "auto",
-    kll_k: int = 800,
+    quantile_mode: str = "exact",
 ) -> DataFrame:
     """Both sides' profiles in ONE scan+aggregate over a side-tagged union.
 
-    ``quantile_mode="counts"`` swaps the sort-based exact percentile for the
-    value-histogram reconstruction (see ``quantiles_by_counts``) — both
-    sides' histograms come from the same single melt+groupBy pass.
-    ``quantile_mode="kll"`` uses the mergeable Datasketches KLL sketch
-    (``_quantile_agg_expr``) — bounded-error, O(k log n) state per side.
+    ``quantile_mode`` picks the quantile engine as in ``numeric_profile``;
+    every engine serves both sides from one pass over the tagged union.
 
     Returns the pre-joined shape ``column_name, ref_<stat>..., curr_<stat>...``
     that drift scoring consumes directly. Compared to profiling each side
     separately this halves job count and lets Spark schedule one job whose
     partial aggregation is map-side for both sides (conditional aggregates:
-    ``F.percentile(when(side='r', col))`` ignores the other side's rows as
-    nulls). At 100 TB: exactly one pass over each snapshot, shuffling 1 row.
+    ``avg(CASE WHEN side = 'r' THEN col END)`` ignores the other side's rows
+    as nulls). At 100 TB: exactly one pass over each snapshot, shuffling 1 row.
     """
     cols = columns if columns is not None else sorted(
         set(numeric_columns(df_ref)) & set(numeric_columns(df_curr))
@@ -586,12 +580,11 @@ def numeric_profile_pair(
     qlist = list(quantiles)
     shape_fields = ["skewness", "kurtosis"] if with_shape else []
 
-    # SQL-string assembly — see _quantile_agg_sql for why (py4j round-trips
-    # dominated driver-side plan construction for these wide aggregates)
-    sides = {"ref": "__side = 'r'", "curr": "__side = 'c'"}
+    # SQL-string assembly — see the module docstring
+    sides = {"ref": "r", "curr": "c"}
     aggs: list[str] = []
-    qaggs: list[str] = []
-    for pre, cond in sides.items():
+    for pre, tag in sides.items():
+        cond = f"__side = '{tag}'"
         aggs.append(f"sum(CAST({cond} AS BIGINT)) AS `__{pre}_n_rows`")
         for c in cols:
             dc = f"CASE WHEN {cond} THEN CAST(`{c}` AS DOUBLE) END"
@@ -608,33 +601,19 @@ def numeric_profile_pair(
                     f"skewness({dc}) AS `{pre}__{c}__skewness`",
                     f"kurtosis({dc}) AS `{pre}__{c}__kurtosis`",
                 ]
-            if qlist and quantile_mode != "counts":
-                qsql = _quantile_agg_sql(
-                    dc, qlist, quantile_mode, exact_quantiles,
-                    quantile_accuracy, kll_k,
-                )
-                qaggs.append(f"{qsql} AS `{pre}__{c}__q`")
 
     # quantile subtree split from the codegen-able stats — see numeric_profile
     wide = tagged.selectExpr(*aggs)
-    if qlist and (quantile_mode == "exact" or (quantile_mode == "auto" and exact_quantiles)):
-        # exact mode: ONE NumPy gather over the side-tagged union serves
-        # both sides' per-column quantile arrays (identical values to the
-        # conditional percentile aggregates it replaces)
-        qrow = _sorted_quantile_row(
+    if qlist:
+        qrow = _quantile_row(
             tagged,
-            [
-                (f"{pre}__{c}__q", c, side_val, None)
-                for pre, side_val in (("ref", "r"), ("curr", "c"))
-                for c in cols
-            ],
+            [(f"{pre}__{c}__q", c, tag, None) for pre, tag in sides.items() for c in cols],
             qlist,
+            quantile_mode,
             side_col="__side",
+            accuracy=quantile_accuracy,
         )
         wide = _attach_quantile_row(wide, qrow)
-    elif qaggs:
-        wide = wide.crossJoin(tagged.selectExpr(*qaggs))
-    counts_mode = bool(qlist) and quantile_mode == "counts"
     structs = []
     for c in cols:
         fields = [f"'column_name', '{c}'"]
@@ -650,29 +629,12 @@ def numeric_profile_pair(
                 f"'{pre}_stddev', `{pre}__{c}__stddev`",
             ]
             fields += [f"'{pre}_{s}', `{pre}__{c}__{s}`" for s in shape_fields]
-            if not counts_mode:
-                fields += [
-                    f"'{pre}_{_qname(p)}', `{pre}__{c}__q`[{i}]"
-                    for i, p in enumerate(qlist)
-                ]
-        structs.append("named_struct(" + ", ".join(fields) + ")")
-    long = wide.selectExpr("inline(array(" + ", ".join(structs) + "))")
-    if counts_mode:
-        qtable = quantiles_by_counts(
-            tagged,
-            cols,
-            qlist,
-            sides={"ref_": F.expr(sides["ref"]), "curr_": F.expr(sides["curr"])},
-        )
-        long = long.join(F.broadcast(qtable), "column_name", "left").select(
-            *long.columns,
-            *[
-                F.col(f"{pre}q")[i].alias(f"{pre}{_qname(p)}")
-                for pre in ("ref_", "curr_")
+            fields += [
+                f"'{pre}_{_qname(p)}', `{pre}__{c}__q`[{i}]"
                 for i, p in enumerate(qlist)
-            ],
-        )
-    return long
+            ]
+        structs.append("named_struct(" + ", ".join(fields) + ")")
+    return wide.selectExpr("inline(array(" + ", ".join(structs) + "))")
 
 
 def categorical_summary(
@@ -708,68 +670,12 @@ def categorical_summary(
     return wide.selectExpr("inline(array(" + ", ".join(structs) + "))")
 
 
-def _wide_quantile_row(
-    df: DataFrame,
-    columns: list[str],
-    qlist: list[float],
-    quantile_mode: str,
-    prefix: str = "__b",
-    kll_k: int = 800,
-) -> DataFrame:
-    """ONE-row frame with ``{prefix}{i}`` = column i's quantile array,
-    computed under the selected mode:
-
-    * ``"exact"`` — sort-based ``percentile`` (buffers each column's
-      values in its aggregation buffer; the oracle contract, fine at
-      bench scale, the memory wall at 100 TB),
-    * ``"counts"`` — :func:`quantiles_by_counts`: exact values from the
-      (value → count) histogram, state bounded by distinct values (the
-      scale path for exact ranks),
-    * ``"kll"`` — Datasketches KLL sketch, mergeable bounded-rank-error
-      state (the scale path when approximate ranks suffice).
-    """
-    if quantile_mode == "exact":
-        # NumPy gather engine — identical values to the sort-based
-        # ``percentile`` aggregate it replaces (see _sorted_quantile_row)
-        return _sorted_quantile_row(
-            df,
-            [(f"{prefix}{i}", c, None, None) for i, c in enumerate(columns)],
-            [float(p) for p in qlist],
-        )
-    if quantile_mode == "kll":
-        probs = "array(" + ", ".join(f"{float(p)!r}D" for p in qlist) + ")"
-        frag = (
-            "kll_sketch_get_quantile_double("
-            f"kll_sketch_agg_double(CAST(`{{c}}` AS DOUBLE), {int(kll_k)}), "
-            + probs
-            + ")"
-        )
-        return df.agg(
-            *[
-                F.expr(frag.format(c=c) + f" AS {prefix}{i}")
-                for i, c in enumerate(columns)
-            ]
-        )
-    if quantile_mode != "counts":
-        raise ValueError(f"unknown quantile_mode: {quantile_mode!r}")
-    rows = quantiles_by_counts(df, columns, [float(p) for p in qlist])
-    return rows.groupBy().agg(
-        *[
-            F.max(F.when(F.col("column_name") == c, F.col("q"))).alias(
-                f"{prefix}{i}"
-            )
-            for i, c in enumerate(columns)
-        ]
-    )
-
-
+@owned_result
 def robust_profile(
     df: DataFrame,
     columns: list[str],
     trim: float = 0.05,
     quantile_mode: str = "exact",
-    kll_k: int = 800,
-    materialize: bool = True,
 ) -> DataFrame:
     """Outlier-resistant location/scale profile per column: trimmed mean
     (drop the outer ``trim`` mass on each side), winsorized mean (clamp
@@ -794,41 +700,32 @@ def robust_profile(
     MAD's deviation histogram is DERIVED from it (|value − median|
     re-grouped over O(distinct) cells — multiplicities add when
     ``v = med ± d`` collide), never a second raw scan. The two small
-    kept frames (cells, per-column quantiles) are released by
-    ``materialize=True`` (default): the O(columns)-row result comes back
-    as a local relation from one owned run, so nothing leaks into
-    long-lived sessions; ``materialize=False`` returns the plan lazily and
-    leaves cache lifetime to the caller (the plan-inspection knob,
-    matching ``key_skew_profile``/``zipf_fit``).
+    kept frames (cells, per-column quantiles) belong to the enclosing
+    owned run; a call outside one gets its O(columns)-row result as a
+    local relation and leaves nothing cached.
 
     Output: ``column_name, n, lo, hi, median, mad, trimmed_mean,
     winsorized_mean, n_trimmed``.
 
-    ``quantile_mode`` selects the rank-statistic engine (the
-    ``numeric_profile(quantile_mode=)`` knob): ``"exact"`` (default, the
-    oracle contract — sort-based ``percentile``, buffers each column in
-    its aggregation buffer), ``"counts"`` (exact values from the value
-    histogram, state bounded by distinct values — the 100 TB path for
-    exact ranks; bounds AND the MAD median both run on histograms), or
-    ``"kll"`` (mergeable Datasketches sketch, bounded rank error). The
-    conditional-mean pass is identical in every mode.
+    ``quantile_mode`` selects the rank-statistic engine
+    (:func:`_quantile_row`): ``"exact"`` (default, the oracle contract —
+    the NumPy gather, which also yields the exact MAD), ``"counts"``
+    (exact values from the value histogram, state bounded by distinct
+    values — the 100 TB path for exact ranks; bounds AND the MAD median
+    both run on histograms), or ``"approx"`` (``percentile_approx``, the
+    MAD as ``percentile_approx(|x − median|, 0.5)`` in the second pass).
+    The conditional-mean pass is identical in every mode.
     """
     from pyspark_data_drift_detector_spark.functions.quoting import (
         ensure_safe_columns,
     )
 
-    if quantile_mode == "counts" and materialize:
-        with owned_run():
-            return collect_local(
-                [robust_profile(df, columns, trim, quantile_mode, kll_k, materialize=False)]
-            )[0]
     if not 0.0 < trim < 0.5:
         raise ValueError(f"trim must be in (0, 0.5), got {trim}")
     if not columns:
         raise ValueError("no columns")
     ensure_safe_columns(columns)
     lo_p, hi_p = float(trim), float(1.0 - trim)
-    cells = None
     if quantile_mode == "counts":
         # ONE melt + groupBy builds the value histogram; the bounds AND
         # the MAD deviation quantiles both come from it — the deviation
@@ -839,7 +736,7 @@ def robust_profile(
         )
 
         cells = keep(_quantile_cells(df, columns))
-        # one count gates BOTH rank passes (it materializes the persist
+        # one count gates BOTH rank passes (it fills the persist
         # every pass needs anyway); below the gate the bounds AND the
         # MAD deviation-histogram median fuse into ONE NumPy task
         # (_counts_quantile_rows mad fusion — the counts-mode sibling of
@@ -859,21 +756,18 @@ def robust_profile(
                 for i, c in enumerate(columns)
             ]
         )
-    elif quantile_mode == "exact":
-        # fused gather: bounds AND the exact MAD come from the ONE NumPy
-        # sort per column (|x − median| re-sorted in the same Python
+    else:
+        # exact mode fuses: bounds AND the exact MAD come from the ONE
+        # NumPy sort per column (|x − median| re-sorted in the same Python
         # task), so the second pass below is a pure-codegen conditional
         # aggregate — the interpreted percentile(abs(x − med)) object
         # aggregate it replaces was the pass's dominant cost
-        bounds = _sorted_quantile_row(
+        mad = quantile_mode == "exact"
+        bounds = _quantile_row(
             df,
-            [(f"__b{i}", c, None, f"__gmad{i}") for i, c in enumerate(columns)],
+            [(f"__b{i}", c, None, f"__gmad{i}" if mad else None) for i, c in enumerate(columns)],
             [lo_p, 0.5, hi_p],
-        )
-    else:
-        bounds = _wide_quantile_row(
-            df, columns, [lo_p, 0.5, hi_p], quantile_mode, prefix="__b",
-            kll_k=kll_k,
+            quantile_mode,
         )
     aggs = []
     for i, c in enumerate(columns):
@@ -881,11 +775,8 @@ def robust_profile(
         lo, med, hi = f"__b{i}[0]", f"__b{i}[1]", f"__b{i}[2]"
         if quantile_mode == "exact":
             aggs.append(f"first(__gmad{i}) AS __mad{i}")
-        elif quantile_mode == "kll":
-            aggs.append(
-                "kll_sketch_get_quantile_double(kll_sketch_agg_double("
-                f"abs({x} - {med}), {int(kll_k)}), 0.5D) AS __mad{i}"
-            )
+        elif quantile_mode == "approx":
+            aggs.append(f"percentile_approx(abs({x} - {med}), 0.5D) AS __mad{i}")
         aggs += [
             f"count({x}) AS __n{i}",
             f"avg(CASE WHEN {x} >= {lo} AND {x} <= {hi} THEN {x} END)"

@@ -128,7 +128,7 @@ def outlier_drift(
     tagged = df_ref.select(F.lit("r").alias("__side"), *columns).unionByName(
         df_curr.select(F.lit("c").alias("__side"), *columns)
     )
-    # SQL-string assembly — see profile._quantile_agg_sql for why
+    # SQL-string assembly — see the profile module docstring for why
     sides = {"ref": "__side = 'r'", "curr": "__side = 'c'"}
     aggs: list[str] = []
     epsilon = 1e-10

@@ -106,7 +106,7 @@ def temporal_drift(
         df_curr.select(F.lit("c").alias("__side"), *columns)
     )
     # SQL-string assembly: one selectExpr call per aggregate list instead of
-    # ~10 py4j round-trips per expression (see profile._quantile_agg_sql)
+    # ~10 py4j round-trips per expression (see the profile module docstring)
     aggs: list[str] = []
     for pre, tag in sides.items():
         cond = f"__side = '{tag}'"
@@ -692,7 +692,6 @@ def session_drift(
         columns=metrics,
         thresholds=thresholds,
         quantiles=(0.25, 0.5, 0.75),
-        exact_quantiles=True,
     )
 
 

@@ -165,10 +165,8 @@ def detect_drift(
             df_curr,
             columns=batch,
             quantiles=num_quantiles,
-            exact_quantiles=bool(cfg.get("exact_quantiles")),
             quantile_accuracy=int(cfg.get("quantile_accuracy", 10000)),
-            quantile_mode=str(cfg.get("quantile_mode", "auto")),
-            kll_k=int(cfg.get("kll_k", 800)),
+            quantile_mode=str(cfg.get("quantile_mode", "approx")),
             with_shape=run_distributions,
         ))
         shared_pairs.append(pair)
@@ -437,8 +435,7 @@ def detect_drift(
                 df_ref,
                 df_curr,
                 num_cols,
-                exact_quantiles=bool(cfg.get("exact_quantiles")),
-                quantile_mode=str(cfg.get("quantile_mode", "auto")),
+                quantile_mode=str(cfg.get("quantile_mode", "approx")),
             ).select("column_name", "psi", "stability"),
             "column_name",
         )

@@ -81,3 +81,30 @@ def test_new_keys_resolve_through_config():
     assert cfg.get("analyze_benford") is False
     assert cfg.get("key_overlap_columns") == []
     assert cfg.get("output_format") == "parquet"
+
+
+def test_configs_saved_with_the_old_quantile_keys_still_load(tmp_path):
+    """A config saved before ``quantile_mode`` was the only quantile
+    setting holds every default of its day: ``"auto"``, ``exact_quantiles``
+    and ``kll_k``. It loads as ``"approx"``, or ``"exact"`` when
+    ``exact_quantiles`` was set, and the old keys are dropped."""
+    import json
+
+    import pytest
+
+    from pyspark_data_drift_detector_spark.config import load_config
+
+    saved = {
+        **DriftConfig({}).raw,
+        "exact_quantiles": False,
+        "quantile_mode": "auto",
+        "kll_k": 800,
+    }
+    for exact, mode in ((False, "approx"), (True, "exact")):
+        path = tmp_path / f"saved_{exact}.json"
+        path.write_text(json.dumps({**saved, "exact_quantiles": exact}))
+        cfg = load_config(str(path))
+        assert cfg["quantile_mode"] == mode
+        assert "exact_quantiles" not in cfg.raw and "kll_k" not in cfg.raw
+    with pytest.raises(ValueError, match="'approx'"):
+        DriftConfig({"quantile_mode": "kll"})

@@ -39,7 +39,7 @@ def pair(spark):
 
 def test_quantile_shift(pair):
     ref, curr = pair
-    shifts = quantile_shift(ref, curr, ["x"], quantiles=(0.25, 0.5, 0.75), exact_quantiles=True)
+    shifts = quantile_shift(ref, curr, ["x"], quantiles=(0.25, 0.5, 0.75), quantile_mode="exact")
     rows = {r["quantile"]: r for r in shifts.collect()}
     assert len(rows) == 3
     # curr = 1.5×ref ⇒ rel diff ≈ 0.5 at every quantile

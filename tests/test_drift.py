@@ -278,9 +278,9 @@ def test_pipeline_benford_family(spark):
 
 
 def test_quantile_mode_exact_gives_percentile_quartiles(spark):
-    """``quantile_mode: "exact"`` is sort-based whatever ``exact_quantiles``
-    says: a drift run's quartiles equal ``percentile``'s, interpolation
-    included, where ``percentile_approx`` would return a data value."""
+    """``quantile_mode: "exact"`` is sort-based in a drift run: its
+    quartiles equal ``percentile``'s, interpolation included, where the
+    default ``"approx"`` would return a data value."""
     import json
 
     from pyspark_data_drift_detector_spark.pipeline import detect_drift

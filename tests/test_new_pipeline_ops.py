@@ -1066,11 +1066,17 @@ def test_quantile_mode_knob_parity(spark, sf_dir):
     """The 100TB scale path must agree with the oracle path: counts-mode
     (value-histogram) rank statistics equal exact-mode values EXACTLY for
     both robust_profile (bounds and MAD) and equidepth_histogram edges;
-    kll mode lands inside the sketch's rank-error band."""
+    approx mode lands inside the sketch's rank-error band. Every operator,
+    and a drift config, rejects an unknown mode."""
+    from pyspark_data_drift_detector_spark.config import DriftConfig
     from pyspark_data_drift_detector_spark.operators.distribution import (
         equidepth_histogram,
     )
-    from pyspark_data_drift_detector_spark.operators.profile import robust_profile
+    from pyspark_data_drift_detector_spark.operators.profile import (
+        numeric_profile,
+        numeric_profile_pair,
+        robust_profile,
+    )
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     cols = ["l_quantity", "l_extendedprice"]
@@ -1087,19 +1093,14 @@ def test_quantile_mode_knob_parity(spark, sf_dir):
     exact = rp_key(robust_profile(li, cols).collect())
     counts = rp_key(robust_profile(li, cols, quantile_mode="counts").collect())
     assert exact == counts
-    for k in (200, 800):  # the kll_k accuracy knob must thread through
-        kll = {
-            r["column_name"]: r
-            for r in robust_profile(
-                li, cols, quantile_mode="kll", kll_k=k
-            ).collect()
-        }
-        for c in cols:
-            # KLL returns stream values at bounded rank error — a loose
-            # value band (5% of the column's exact spread) catches
-            # estimator breaks at either k
-            spread = exact[c][3] - exact[c][1]
-            assert abs(kll[c]["median"] - exact[c][2]) <= 0.05 * spread + 1e-9, (c, k)
+    approx = {r["column_name"]: r for r in robust_profile(li, cols, quantile_mode="approx").collect()}
+    for c in cols:
+        # percentile_approx returns data values at bounded rank error — a
+        # loose value band (5% of the column's exact spread) catches
+        # estimator breaks in the bounds and the MAD pass
+        spread = exact[c][3] - exact[c][1]
+        assert abs(approx[c]["median"] - exact[c][2]) <= 0.05 * spread + 1e-9, c
+        assert abs(approx[c]["mad"] - exact[c][4]) <= 0.05 * spread + 1e-9, c
 
     def eh_key(rows):
         # ROUND(x, 5) is the driver-oracle contract; the two engines'
@@ -1114,67 +1115,60 @@ def test_quantile_mode_knob_parity(spark, sf_dir):
         equidepth_histogram(li, cols, bins=8, quantile_mode="counts").collect()
     )
     assert eh_exact == eh_counts
-    # kll edges: every bin still present-ish and counts sum to n, at
-    # both the default and a tightened sketch size
+    # approx edges: the bin counts still sum to n
     n = li.where(F.col("l_quantity").isNotNull()).count()
-    for k in (400, 800):
-        eh_kll = equidepth_histogram(
-            li, cols, bins=8, quantile_mode="kll", kll_k=k
-        ).collect()
-        got = sum(r["cnt"] for r in eh_kll if r["column_name"] == "l_quantity")
-        assert got == n, k
+    eh_approx = equidepth_histogram(li, cols, bins=8, quantile_mode="approx").collect()
+    assert sum(r["cnt"] for r in eh_approx if r["column_name"] == "l_quantity") == n
 
-    with pytest.raises(ValueError, match="quantile_mode"):
-        robust_profile(li, cols, quantile_mode="nope")
+    for build in (
+        lambda: robust_profile(li, cols, quantile_mode="nope"),
+        lambda: numeric_profile(li, cols, quantile_mode="exakt"),
+        lambda: numeric_profile_pair(li, li, cols, quantile_mode="exakt"),
+        lambda: equidepth_histogram(li, cols, quantile_mode="exakt"),
+        lambda: DriftConfig({"quantile_mode": "exakt"}),
+    ):
+        with pytest.raises(ValueError, match="quantile_mode"):
+            build()
 
 
 def test_counts_mode_materialize_releases_caches(spark, sf_dir):
-    """ADVICE r8: counts-mode robust_profile / equidepth_histogram
-    persisted their value-histogram cells but never unpersisted them —
-    the cache leaked into long-lived sessions. With the default
-    ``materialize=True`` the result is checkpointed eagerly and every
-    intermediate cache is released; ``materialize=False`` (plan
-    inspection) leaves lifetime to the caller and must agree on values."""
+    """Counts mode keeps its value-histogram cells while it builds. Called
+    outside a drift run, each counts-mode operator runs in an owned run of
+    its own and returns a local relation, so no cache outlives the call;
+    inside a run it returns the lazy plan, with the same rows."""
+    from pyspark_data_drift_detector_spark.functions.lifetime import owned_run
     from pyspark_data_drift_detector_spark.operators.distribution import (
         equidepth_histogram,
     )
-    from pyspark_data_drift_detector_spark.operators.profile import robust_profile
+    from pyspark_data_drift_detector_spark.operators.profile import (
+        numeric_profile,
+        numeric_profile_pair,
+        robust_profile,
+    )
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    ref = li.filter(F.col("l_orderkey") % 2 == 0)
+    curr = li.filter(F.col("l_orderkey") % 2 == 1)
     cols = ["l_quantity"]
-    def lingering(before):
-        # fresh snapshot each call — getPersistentRDDs() is not a live
-        # view. The localCheckpoint RDD itself legitimately stays
-        # registered (it IS the result's data, released when the result
-        # is GC'd) — only non-checkpoint caches count as leaks.
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        return [
-            rid
-            for rid in set(jmap.keySet().toArray()) - before
-            if "localCheckpoint" not in jmap.get(rid).rdd().toDebugString()
-        ]
+    builds = {
+        "numeric_profile": lambda: numeric_profile(li, cols, quantile_mode="counts"),
+        "numeric_profile_pair": lambda: numeric_profile_pair(ref, curr, cols, quantile_mode="counts"),
+        "robust_profile": lambda: robust_profile(li, cols, quantile_mode="counts"),
+        "equidepth_histogram": lambda: equidepth_histogram(li, cols, bins=4, quantile_mode="counts"),
+    }
 
-    before = set(
-        spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-    )
-    mat = robust_profile(li, cols, quantile_mode="counts").collect()
-    assert not lingering(before), "robust_profile leaked a cache"
-    eh = equidepth_histogram(li, cols, bins=4, quantile_mode="counts").collect()
-    assert not lingering(before), "equidepth leaked a cache"
+    def persisted():
+        # a fresh snapshot each call — getPersistentRDDs() is not a live view
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
 
-    lazy = robust_profile(
-        li, cols, quantile_mode="counts", materialize=False
-    ).collect()
-    assert {tuple(r) for r in lazy} == {tuple(r) for r in mat}
-    eh_lazy = equidepth_histogram(
-        li, cols, bins=4, quantile_mode="counts", materialize=False
-    ).collect()
-    assert {tuple(r) for r in eh_lazy} == {tuple(r) for r in eh}
-    # release only the caches the lazy calls created — other fixtures'
-    # caches in this shared session must survive
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in set(jmap.keySet().toArray()) - before:
-        jmap.get(rid).unpersist()
+    for name, build in builds.items():
+        before = persisted()
+        standalone = build().collect()
+        assert persisted() <= before, f"{name} leaked a cache"
+        with owned_run():
+            lazy = build().collect()
+        assert {tuple(r) for r in lazy} == {tuple(r) for r in standalone}, name
+        assert persisted() <= before, name
 
 
 def test_merged_group_drift_window_matches_direct(spark, sf_dir):

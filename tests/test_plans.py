@@ -93,11 +93,14 @@ def test_pair_profile_single_scan_each_side(li):
     # shuffle per subtree
     assert count_scans(drift) == 4
     assert_max_shuffles(drift, 2)
-    # without quantiles the profile is a single scan per side
-    noq = numeric_drift_pair(
-        ref, curr, columns=["l_quantity"], quantiles=(0.25, 0.5, 0.75), exact_quantiles=False
+    # the approx path a drift run takes by default: percentile_approx
+    # aggregates in the quantile subtree, no Python gather
+    approx = numeric_drift_pair(
+        ref, curr, columns=["l_quantity"], quantiles=(0.25, 0.5, 0.75), quantile_mode="approx"
     )
-    assert count_scans(noq) == 4
+    assert count_scans(approx) == 4
+    assert_max_shuffles(approx, 2)
+    assert "FlatMapGroupsInPandas" not in simple_plan(approx)
 
 
 @pytest.fixture
@@ -213,36 +216,31 @@ def test_edf_and_counts_quantiles_use_distributed_cumsum(li, monkeypatch):
     ref = li.filter(F.col("l_orderkey") % 2 == 0)
     curr = li.filter(F.col("l_orderkey") % 2 == 1)
     check(edf_distances(ref, curr, ["l_quantity", "l_extendedprice"]))
-    check(
-        numeric_profile(
-            li, columns=["l_quantity"], quantiles=(0.25, 0.5, 0.75), quantile_mode="counts"
-        )
-    )
     # the r8 single-scan counts rewrites keep the same bucketed shape AND
     # read the raw table exactly once for their rank statistics
+    from pyspark_data_drift_detector_spark.functions.lifetime import owned_run
     from pyspark_data_drift_detector_spark.operators.distribution import (
         equidepth_histogram,
     )
     from pyspark_data_drift_detector_spark.operators.profile import robust_profile
-    from pyspark_data_drift_detector_spark.plans.inspect import count_scans
 
-    from pyspark_data_drift_detector_spark.plans.inspect import simple_plan
-
-    # materialize=False exposes the lazy plan — the default eagerly
-    # checkpoints (releasing the cells cache) which hides the windows
-    ed = equidepth_histogram(
-        li, ["l_quantity", "l_tax"], bins=4, quantile_mode="counts",
-        materialize=False,
-    )
-    check(ed)
-    # every consumer (edge fit + binning) reads the PERSISTED value
-    # histogram — the raw table materializes it once
-    assert "InMemoryTableScan" in simple_plan(ed)
-    rp = robust_profile(
-        li, ["l_quantity", "l_tax"], quantile_mode="counts", materialize=False
-    )
-    check(rp)
-    assert "InMemoryTableScan" in simple_plan(rp)
+    # inside an owned run the counts-mode builders return their lazy
+    # plans; outside one the result comes back as a local relation, which
+    # hides the windows
+    with owned_run():
+        check(
+            numeric_profile(
+                li, columns=["l_quantity"], quantiles=(0.25, 0.5, 0.75), quantile_mode="counts"
+            )
+        )
+        ed = equidepth_histogram(li, ["l_quantity", "l_tax"], bins=4, quantile_mode="counts")
+        check(ed)
+        # every consumer (edge fit + binning) reads the PERSISTED value
+        # histogram — the raw table materializes it once
+        assert "InMemoryTableScan" in simple_plan(ed)
+        rp = robust_profile(li, ["l_quantity", "l_tax"], quantile_mode="counts")
+        check(rp)
+        assert "InMemoryTableScan" in simple_plan(rp)
 
 
 def test_complex_profile_single_pass(spark, sf_dir):
